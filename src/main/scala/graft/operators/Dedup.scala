@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,8 +33,10 @@ object Dedup {
     shingleHashedOf(Tables.documents(spark, dir))
 
   /** Same derivation over ANY (doc_id, text) frame — batch or streaming
-    * (every step is narrow, so it runs unchanged on a readStream source;
-    * [[graft.streaming.DedupStream]] relies on this).
+    * (every step is narrow, so it runs unchanged on a readStream source).
+    * [[graft.streaming.DedupStream]] derives each micro-batch's shingle
+    * sets here and consumes them inside the same micro-batch; they are
+    * never joined against another stream, so no state ever holds them.
     */
   private[graft] def shingleHashedOf(docs: DataFrame): DataFrame =
     docs
@@ -43,9 +45,12 @@ object Dedup {
       .select(col("doc_id"),
         graft.functions.VectorExpressions.shingleHash3(col("toks"), P).as("h0"))
 
-  /** LSH band keys (doc_id, bid, bkey) of a shingle-hashed frame — the
-    * materialized index layout [[graft.streaming.DedupStream]] and
-    * [[minhashIncremental]] probe.
+  /** LSH band keys (doc_id, bid, bkey, carry…) of a shingle-hashed frame —
+    * the materialized index layout [[graft.streaming.DedupStream]] and
+    * [[minhashIncremental]] probe. Each `carry` column (named, computed
+    * from `sh`) is evaluated once per document beside the signature and
+    * rides on every one of its band rows, so in-bucket or in-batch
+    * verification needs no join back to the shingle table.
     *
     * INDEX-FORMAT NOTE: bkey changed from the "sig0,sig1" STRING to the
     * packed LONG sig[2j]·2³¹ + sig[2j+1] (r19 optimization — injective, so
@@ -53,10 +58,15 @@ object Dedup {
     * band index from an earlier version must rebuild it; all in-repo
     * consumers derive the index in-session, so nothing here breaks.
     */
-  private[graft] def bandsOf(sh: DataFrame): DataFrame = sh
-    .select(col("doc_id"), minhashSignature(col("h0")).as("sig"))
-    .select(col("doc_id"), explode(bandKeys(col("sig"))).as("b"))
-    .select(col("doc_id"), col("b.bid"), col("b.bkey"))
+  private[graft] def bandsOf(sh: DataFrame, carry: Column*): DataFrame = {
+    // materialize the signature BEFORE fanning out band keys: inlining the
+    // sig expression into the 32 element refs of the explode would evaluate
+    // it 32× per row (measured 27 s vs 2 s at sf0.1)
+    val signed = sh.select(col("doc_id") +: minhashSignature(col("h0")).as("sig") +: carry: _*)
+    val carried = signed.columns.drop(2).map(col).toSeq
+    signed.select(col("doc_id") +: carried :+ explode(bandKeys(col("sig"))).as("b"): _*)
+      .select(Seq(col("doc_id"), col("b.bid"), col("b.bkey")) ++ carried: _*)
+  }
 
   /** C2 — MinHash + LSH near-dup pairs.
     *
@@ -89,10 +99,6 @@ object Dedup {
     val sh = shingleHashedOf(docs).localCheckpoint(false)
     val spark = docs.sparkSession
     import spark.implicits._
-    // materialize the signature BEFORE fanning out band keys: inlining the
-    // sig expression into the 32 element refs of the explode would evaluate
-    // it 32× per row (measured 27 s vs 2 s at sf0.1).
-    //
     // IN-BUCKET verification (the C2b r16 device, same rationale): on a
     // template-heavy corpus the band join emits tens of millions of pair
     // occurrences with a ~0.1% survival rate, so the former shape (slim
@@ -104,11 +110,8 @@ object Dedup {
     // only (a pair verifies once per colliding band). Same candidates,
     // same exact-jaccard verification, same output — a pure
     // execution-shape change the oracle doesn't see.
-    val bands = sh
-      .select(col("doc_id"), minhashSignature(col("h0")).as("sig"),
-        array_sort(array_distinct(col("h0"))).as("hh"))
-      .select(col("doc_id"), col("hh"), explode(bandKeys(col("sig"))).as("b"))
-      .select(col("b.bid"), col("b.bkey"), col("doc_id"), col("hh"))
+    val bands = bandsOf(sh, array_sort(array_distinct(col("h0"))).as("hh"))
+      .select(col("bid"), col("bkey"), col("doc_id"), col("hh"))
       .as[(Int, Long, Long, Array[Long])]
     bands
       .groupByKey(r => (r._1, r._2))
@@ -251,12 +254,7 @@ object Dedup {
     val hot = slimBands.groupBy("bid", "bkey")
       .agg(count(lit(1)).as("pop")).where(col("pop") >= 2)
       .select(col("bid"), col("bkey"))
-    val bands = sh
-      .select(col("doc_id"), minhashSignature(col("h0")).as("sig"),
-        array_sort(array_distinct(col("h0"))).as("hh"))
-      .select(col("doc_id"), col("hh"), explode(bandKeys(col("sig"))).as("b"))
-      .select(col("b.bid").as("bid"), col("b.bkey").as("bkey"),
-        col("doc_id"), col("hh"))
+    val bands = bandsOf(sh, array_sort(array_distinct(col("h0"))).as("hh"))
       .join(broadcast(hot), Seq("bid", "bkey"))
       .select(col("bid"), col("bkey"), col("doc_id"), col("hh"))
       .as[(Int, Long, Long, Array[Long])]

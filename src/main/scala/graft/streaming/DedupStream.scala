@@ -10,14 +10,18 @@ import graft.operators.Dedup
   * index — the stream-static join, the third join kind in the family
   * (D6 covers stream-stream, the batch operators static-static).
   *
-  * Why this is the right shape for continuous ingest at 100 TB: the
-  * static side (the persisted band index + shingle sets the batch
-  * pipeline maintains) is not streamed and holds NO join state — Spark
-  * re-reads/broadcasts it per micro-batch while only the (small) arriving
-  * delta flows; no watermark is needed because nothing waits on the
-  * static side. Every per-document derivation (tokenize → shingle-hash →
-  * signature → band keys) is narrow, so the batch kernels run UNCHANGED
-  * on the stream — the same code path the batch gate oracle-checks
+  * The operator's only join partners are the two static index frames (the
+  * persisted band index + shingle sets the batch pipeline maintains), so
+  * it holds NO join state: each micro-batch derives its documents' bands
+  * with their shingle set carried on every band row, probes the band
+  * index, and verifies the candidates against the corpus shingle sets —
+  * everything a pair needs is in the micro-batch that produced it. No
+  * watermark is needed because nothing waits on either side. The one
+  * stateful operator is the final pair `dropDuplicates`, whose state holds
+  * exactly one key per EMITTED pair (output-scale, not ingest-scale).
+  *
+  * Every per-document derivation (tokenize → shingle-hash → signature →
+  * band keys) is narrow, so the batch kernels run UNCHANGED on the stream
   * ([[Dedup.shingleHashedOf]]/[[Dedup.bandsOf]] are shared, and the spec
   * pins stream output == batch [[Dedup.minhashIncremental]]).
   */
@@ -36,27 +40,23 @@ object DedupStream {
     * near-dup pairs (new_id, corpus_id, jac) in Append mode. `newDocs` is
     * a streaming frame of (doc_id, text); both index frames are static.
     *
-    * The candidate `dropDuplicates` is the only stateful operator, and its
-    * state holds one key per EMITTED candidate pair — OUTPUT-scale, not
-    * ingest-scale (a re-delivered document's pairs are suppressed, giving
-    * exactly-once pair emission across micro-batches; spec-pinned). A
-    * deployment that tolerates occasional re-emission caps even that with
+    * A pair colliding in several bands verifies once per band inside its
+    * micro-batch; the closing `dropDuplicates` collapses those copies and
+    * suppresses a re-delivered document's pairs, giving exactly-once pair
+    * emission across micro-batches (spec-pinned). A deployment that
+    * tolerates occasional re-emission caps even that state with
     * `dropDuplicatesWithinWatermark` on an ingest-time column.
     */
   def incremental(newDocs: DataFrame, idxBands: DataFrame, corpusSh: DataFrame,
-      threshold: Double = 0.5): DataFrame = {
-    val sh = Dedup.shingleHashedOf(newDocs)
-    val cand = Dedup.bandsOf(sh).as("y")
+      threshold: Double = 0.5): DataFrame =
+    Dedup.bandsOf(Dedup.shingleHashedOf(newDocs), col("h0").as("hn")).as("y")
       .join(idxBands.as("x"),
         col("x.bid") === col("y.bid") && col("x.bkey") === col("y.bkey"))
-      .select(col("y.doc_id").as("new_id"), col("x.doc_id").as("corpus_id"))
-      .dropDuplicates("new_id", "corpus_id")
-    cand
+      .select(col("y.doc_id").as("new_id"), col("x.doc_id").as("corpus_id"), col("y.hn"))
       .join(corpusSh.select(col("doc_id").as("corpus_id"), col("h0").as("hc")),
         "corpus_id")
-      .join(sh.select(col("doc_id").as("new_id"), col("h0").as("hn")), "new_id")
       .select(col("new_id"), col("corpus_id"),
         round(graft.functions.TextHash.jaccard(col("hc"), col("hn")), 6).as("jac"))
       .where(col("jac") >= threshold)
-  }
+      .dropDuplicates("new_id", "corpus_id")
 }

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.streaming.EventsStream
 import graft.streaming.EventsStream.Event
@@ -356,34 +357,84 @@ class StreamingSpec extends GraftSuite {
     } finally q.stop()
   }
 
-  test("stream-static incremental dedup matches the batch operator across micro-batches") {
+  /** The incremental-dedup fixture: the static corpus index of the
+    * non-batch docs (doc_id % 5 != 4, the batch operator's split), the
+    * arriving docs in id order, and the query over a fresh MemoryStream.
+    */
+  private def incDedup(name: String)
+      : (MemoryStream[(Long, String)], Seq[(Long, String)], StreamingQuery) = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    // same split as the batch operator: batch = doc_id % 5 == 4
     val (idxBands, corpusSh) = graft.streaming.DedupStream.corpusIndex(
       docs.where(pmod(col("doc_id"), lit(5)) =!= lit(4)))
     val newDocs = docs.where(pmod(col("doc_id"), lit(5)) === lit(4))
-      .select("doc_id", "text").as[(Long, String)].collect().sortBy(_._1)
-    assert(newDocs.length >= 2, "need at least two arriving docs to split across batches")
+      .select("doc_id", "text").as[(Long, String)].collect().sortBy(_._1).toSeq
     val input = MemoryStream[(Long, String)]
     val q = graft.streaming.DedupStream.incremental(
       input.toDF().toDF("doc_id", "text"), idxBands, corpusSh)
-      .writeStream.format("memory").queryName("incdedup").outputMode("append").start()
+      .writeStream.format("memory").queryName(name).outputMode("append").start()
+    (input, newDocs, q)
+  }
+
+  private def pairsOf(table: String): Seq[(Long, Long, Double)] = {
+    import spark.implicits._
+    spark.table(table).select("new_id", "corpus_id", "jac")
+      .as[(Long, Long, Double)].collect().toSeq.sorted
+  }
+
+  test("stream-static incremental dedup matches the batch operator across micro-batches") {
+    import spark.implicits._
+    // multiset, not set: a re-delivered doc's pairs must not be emitted twice
+    val batch = operators.Dedup.minhashIncremental(spark, sf)
+      .as[(Long, Long, Double)].collect().toSeq.sorted
+    val (input, newDocs, q) = incDedup("incdedup")
     try {
-      // deliver the arriving batch across TWO micro-batches, with one doc
-      // re-delivered (at-least-once ingest) — the pair-key state dedups it
+      assert(newDocs.length >= 2, "need at least two arriving docs to split across batches")
+      val paired = batch.map(_._1).toSet
+      assert(paired.nonEmpty, "the fixture must produce pairs for re-delivery to bite")
+      // deliver the arriving batch across micro-batches with at-least-once
+      // re-delivery of every doc that HAS pairs: the first half's again in
+      // the second micro-batch, then all of them once more in a third
       val (first, rest) = newDocs.splitAt(newDocs.length / 2)
-      input.addData(first.toSeq)
+      input.addData(first)
       q.processAllAvailable()
-      input.addData(rest.toSeq :+ first.head)
+      input.addData(rest ++ first.filter(d => paired(d._1)))
       q.processAllAvailable()
-      val streamed = spark.table("incdedup")
-        .select("new_id", "corpus_id", "jac").as[(Long, Long, Double)]
-        .collect().toSet
-      val batch = operators.Dedup.minhashIncremental(spark, sf)
-        .as[(Long, Long, Double)].collect().toSet
+      input.addData(newDocs.filter(d => paired(d._1)))
+      q.processAllAvailable()
+      val streamed = pairsOf("incdedup")
       assert(streamed == batch, s"stream $streamed vs batch $batch")
+    } finally q.stop()
+  }
+
+  test("stream-static incremental dedup keeps one state operator holding only the emitted pairs") {
+    val (input, newDocs, q) = incDedup("incdedup_state")
+    try {
+      newDocs.grouped(math.max(1, newDocs.length / 4)).foreach { c =>
+        input.addData(c)
+        q.processAllAvailable()
+      }
+      val ops = q.lastProgress.stateOperators
+      assert(ops.length == 1, s"only the pair dedup may keep state: ${ops.map(_.json).toSeq}")
+      val emitted = pairsOf("incdedup_state")
+      assert(emitted.nonEmpty, "the fixture must emit pairs")
+      assert(ops.head.numRowsTotal == emitted.length,
+        s"state rows ${ops.head.numRowsTotal} vs ${emitted.length} emitted pairs")
+    } finally q.stop()
+  }
+
+  test("stream-static incremental dedup: empty and sub-shingle micro-batches emit nothing") {
+    val (input, _, q) = incDedup("incdedup_edge")
+    try {
+      input.addData(Seq.empty[(Long, String)])
+      q.processAllAvailable()
+      // fewer than 3 tokens → no 3-word shingle → filtered before banding
+      input.addData(Seq((90000001L, ""), (90000002L, "one"), (90000003L, "two words")))
+      q.processAllAvailable()
+      assert(q.exception.isEmpty, s"query failed: ${q.exception}")
+      assert(q.lastProgress.batchId >= 1, s"both micro-batches must run: ${q.lastProgress.json}")
+      assert(pairsOf("incdedup_edge").isEmpty)
     } finally q.stop()
   }
 
