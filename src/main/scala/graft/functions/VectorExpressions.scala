@@ -650,6 +650,9 @@ case class LshTableBuckets(child: Expression, planes: Array[Double],
 case class MultiProbeBuckets(child: Expression, planes: Array[Double],
     nPlanes: Int, nTables: Int) extends UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  // the probes flip the TWO lowest-margin planes — with one plane the
+  // second index stays -1 and `1L << -1` emits garbage buckets silently
+  require(nPlanes >= 2, s"MultiProbeBuckets needs nPlanes >= 2, got $nPlanes")
   private val dim = planes.length / (nPlanes * nTables)
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("tbl", IntegerType, nullable = false),

@@ -281,32 +281,7 @@ object Layout {
     * files-per-bucket growth of a long append cadence.
     */
   def appendBucketed(df: DataFrame, table: String, key: String,
-      buckets: Int): Unit = tableLock(table).synchronized {
-    // the contract is append into an EXISTING bucketed table; a typo'd or
-    // not-yet-created name would otherwise silently fork a one-batch table
-    // that later joins read as if it were the full fact table
-    val spark = df.sparkSession
-    require(spark.catalog.tableExists(table),
-      s"appendBucketed target '$table' does not exist — create it with writeBucketed first")
-    val loc = tablePath(spark, table)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // an ad-hoc append must not reset the ingest hwm — that would reopen
-    // the exactly-once window for a restarting append stream — and it
-    // must not BLESS a crashed delivery's unmanifested files either (r18
-    // review): bucketWriter's manifest is the raw listing, so without the
-    // same orphan retirement appendBucketedBatch does, an ad-hoc append
-    // between a delivery's crash and the stream's restart would
-    // manifest the crashed files and the id's re-delivery would land the
-    // batch twice. The table's lock serializes this
-    // read-hwm→append→manifest sequence against a live ingestSink and
-    // against merge/compact (which take it too) — an unserialized
-    // interleave could write back a STALE hwm and reopen the window it
-    // just preserved.
-    val (gen, priorFiles, hwm) = readManifest(fs, loc)
-      .getOrElse((0L, dataFileNames(fs, loc), -1L))
-    retireOrphans(fs, loc, dataFileNames(fs, loc) -- priorFiles, gen)
-    bucketWriter(df, table, key, buckets, "append", hwm)
-  }
+      buckets: Int): Unit = { land(df, table, key, buckets, batchId = None); () }
 
   /** Move root-relative data files into the `dirName` retirement dir
     * under `root`, preserving any subdir structure (partition values live
@@ -317,31 +292,49 @@ object Layout {
     * policy. Within one generation dir, additive is also the crash rule:
     * the rels may be the un-moved HALF of the same event whose other
     * half already sits there (r18 review). The one retire recipe all
-    * retirement sites share.
+    * retirement sites share, including the parking of data files no
+    * manifest names (a crashed delivery or merge).
     */
   private def retireTo(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, dirName: String,
       rels: Iterable[String]): Unit =
-    if (rels.nonEmpty) {
-      val retired = new org.apache.hadoop.fs.Path(root, dirName)
-      rels.foreach { rel =>
-        val to = new org.apache.hadoop.fs.Path(retired, rel)
-        fs.mkdirs(to.getParent)
-        require(fs.rename(new org.apache.hadoop.fs.Path(root, rel), to),
-          s"retiring $rel in $root failed")
-      }
+    moveRels(fs, root, new org.apache.hadoop.fs.Path(root, dirName), rels, "retiring")
+
+  /** Move `from`/rel to `to`/rel for each rel — the ONE move loop behind
+    * every move-in and retirement. rename() reports failure as `false`,
+    * not an exception, so every move is checked.
+    */
+  private def moveRels(fs: org.apache.hadoop.fs.FileSystem,
+      from: org.apache.hadoop.fs.Path, to: org.apache.hadoop.fs.Path,
+      rels: Iterable[String], op: String): Unit =
+    rels.foreach { rel =>
+      val dst = new org.apache.hadoop.fs.Path(to, rel)
+      fs.mkdirs(dst.getParent)
+      require(fs.rename(new org.apache.hadoop.fs.Path(from, rel), dst),
+        s"$op: rename $rel from $from to $to failed")
     }
 
-  /** Park data files no manifest names under `_pre_merge/g<gen>` (the
-    * crashed delivery/merge window, filed under the manifest generation
-    * that governed when the crash was discovered) — excluded from every
-    * read, recoverable by hand, never silently re-manifested. Growth is
-    * bounded by the [[vacuum]] retention, which reclaims aged generation
-    * dirs.
+  /** Move a staged write's data files into `root`; returns their rels. */
+  private def moveIn(fs: org.apache.hadoop.fs.FileSystem,
+      tmp: org.apache.hadoop.fs.Path, root: org.apache.hadoop.fs.Path,
+      op: String): Seq[String] = {
+    val fresh = relDataFiles(fs, tmp)
+    moveRels(fs, tmp, root, fresh, op)
+    fresh
+  }
+
+  /** Delete the fully-empty partition dirs a swap or an erasure left
+    * under `root`, bottom-up (stale `col=value` entries cost listings).
     */
-  private def retireOrphans(fs: org.apache.hadoop.fs.FileSystem,
-      loc: org.apache.hadoop.fs.Path, orphans: Set[String], gen: Long): Unit =
-    retireTo(fs, loc, s"_pre_merge/g$gen", orphans)
+  private def pruneEmptyDirs(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Unit =
+    fs.listStatus(root).foreach { s =>
+      val n = s.getPath.getName
+      if (s.isDirectory && !n.startsWith("_") && !n.startsWith(".")) {
+        pruneEmptyDirs(fs, s.getPath)
+        if (fs.listStatus(s.getPath).isEmpty) fs.delete(s.getPath, false)
+      }
+    }
 
   /** EXACTLY-ONCE [[appendBucketed]] for a Structured Streaming
     * `foreachBatch` cadence (the B12→B10 ingest front door): Spark
@@ -378,40 +371,74 @@ object Layout {
     * on other tables is never stalled by a micro-batch's data write.
     */
   def appendBucketedBatch(df: DataFrame, table: String, key: String,
-      buckets: Int, batchId: Long): Boolean = tableLock(table).synchronized {
+      buckets: Int, batchId: Long): Boolean =
+    land(df, table, key, buckets, Some(batchId))
+
+  /** The ONE landing path of [[appendBucketed]] (`batchId` None) and
+    * [[appendBucketedBatch]]: an ad-hoc landing carries the hwm forward,
+    * a batch landing passes [[batchApplied]] and stamps its id. Returns
+    * true iff it appended.
+    */
+  private def land(df: DataFrame, table: String, key: String, buckets: Int,
+      batchId: Option[Long]): Boolean = tableLock(table).synchronized {
+    val op = if (batchId.isEmpty) "appendBucketed" else "appendBucketedBatch"
+    // the contract is append into an EXISTING bucketed table; a typo'd or
+    // not-yet-created name would otherwise silently fork a one-batch table
+    // that later joins read as if it were the full fact table
     val spark = df.sparkSession
     require(spark.catalog.tableExists(table),
-      s"appendBucketedBatch target '$table' does not exist — create it with writeBucketed first")
-    require(batchId >= 0, s"appendBucketedBatch needs a streaming batch id, got $batchId")
+      s"$op target '$table' does not exist — create it with writeBucketed first")
+    batchId.foreach(id =>
+      require(id >= 0, s"$op needs a streaming batch id, got $id"))
     val loc = tablePath(spark, table)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     withWriterLease(spark, loc) {
-    val (gen, priorFiles, hwm) = readManifest(fs, loc)
-      .getOrElse((0L, dataFileNames(fs, loc), -1L))
-    if (batchId <= hwm) {
-      // ids at or below the mark are no-ops: the restart re-delivery
-      // (batchId == hwm) and the backup/DR-restored checkpoint of the
-      // SAME stream replaying 0 < batchId < hwm on its way back to the
-      // mark (its WAL re-delivers byte-identical batches — a loud reject
-      // here would wedge that legitimate catch-up in a crash loop, r18
-      // review). The one id that cannot be a same-stream replay is 0
-      // against a positive mark: every FRESH checkpoint starts there, and
-      // no-opping it would silently drop the new stream's batches up to
-      // the mark — reject loudly. Irreducible blind spot: at hwm == 0 a
-      // new checkpoint's batch 0 is indistinguishable from the legitimate
-      // re-delivery of batch 0 and is treated as the latter (only
-      // reachable on a one-batch table).
+      // an ad-hoc append must not reset the ingest hwm — that would reopen
+      // the exactly-once window for a restarting append stream — and it
+      // must not BLESS a crashed delivery's unmanifested files either (r18
+      // review): bucketWriter's manifest is the raw listing, so without
+      // the orphan retirement below, an ad-hoc append between a delivery's
+      // crash and the stream's restart would manifest the crashed files
+      // and the id's re-delivery would land the batch twice. The table's
+      // lock serializes this read-hwm→append→manifest sequence against a
+      // live ingestSink and against merge/compact (which take it too) — an
+      // unserialized interleave could write back a STALE hwm and reopen
+      // the window it just preserved.
+      val (gen, priorFiles, hwm) = readManifest(fs, loc)
+        .getOrElse((0L, dataFileNames(fs, loc), -1L))
+      if (batchId.exists(id => batchApplied(op, table, id, hwm))) false
+      else {
+        // retire a crashed delivery's unmanifested files before appending
+        retireTo(fs, loc, Manifest.preMerge(gen), dataFileNames(fs, loc) -- priorFiles)
+        bucketWriter(df, table, key, buckets, "append", batchId.getOrElse(hwm))
+        true
+      }
+    }
+  }
+
+  /** The ONE batch-id high-water-mark gate [[appendBucketedBatch]] and
+    * [[maintainAdditiveBatch]] share: true when `batchId` is at or below
+    * the manifest's ingest `hwm` — the caller no-ops.
+    *
+    * Ids at or below the mark are no-ops: the restart re-delivery
+    * (batchId == hwm) and the backup/DR-restored checkpoint of the SAME
+    * stream replaying 0 < batchId < hwm on its way back to the mark (its
+    * WAL re-delivers byte-identical batches — a loud reject here would
+    * wedge that legitimate catch-up in a crash loop, r18 review). The one
+    * id that cannot be a same-stream replay is 0 against a positive mark:
+    * every FRESH checkpoint starts there, and no-opping it would silently
+    * drop the new stream's batches up to the mark — reject loudly.
+    * Irreducible blind spot: at hwm == 0 a new checkpoint's batch 0 is
+    * indistinguishable from the legitimate re-delivery of batch 0 and is
+    * treated as the latter (only reachable on a one-batch table).
+    */
+  private def batchApplied(op: String, table: String, batchId: Long,
+      hwm: Long): Boolean = {
+    if (batchId <= hwm)
       require(batchId > 0 || hwm <= 0,
-        s"appendBucketedBatch got batch id 0 but '$table' has ingest hwm $hwm — " +
+        s"$op got batch id 0 but '$table' has ingest hwm $hwm — " +
           "a fresh checkpoint must target a fresh table (or carry the old checkpoint)")
-      false
-    } else {
-      // retire a crashed delivery's unmanifested files before appending
-      retireOrphans(fs, loc, dataFileNames(fs, loc) -- priorFiles, gen)
-      bucketWriter(df, table, key, buckets, "append", hwm = batchId)
-      true
-    }
-    }
+    batchId <= hwm
   }
 
   /** The `foreachBatch` form of [[appendBucketedBatch]]:
@@ -507,7 +534,7 @@ object Layout {
       .foreach(s => fs.delete(s.getPath, true))
     val genBefore = readManifest(fs, dst) match {
       case Some((gen, valid, _)) =>
-        retireTo(fs, dst, s"_pre_swap/g$gen",
+        retireTo(fs, dst, Manifest.preSwap(gen),
           relDataFiles(fs, dst)
             .filter(rel => !valid.contains(new org.apache.hadoop.fs.Path(rel).getName)))
         gen
@@ -518,13 +545,7 @@ object Layout {
     try {
       write(tmp.toString)
       val prior = relDataFiles(fs, dst)
-      val fresh = relDataFiles(fs, tmp)
-      fresh.foreach { rel =>
-        val to = new org.apache.hadoop.fs.Path(dst, rel)
-        fs.mkdirs(to.getParent)
-        require(fs.rename(new org.apache.hadoop.fs.Path(tmp, rel), to),
-          s"stagedSwap: rename $rel into $dst failed")
-      }
+      val fresh = moveIn(fs, tmp, dst, "stagedSwap")
       // manifest names BASENAMES (job-uuid part names are unique across
       // writes, including inside partition subdirs) — flips the readDir
       // view to the new set in one atomic rename
@@ -533,20 +554,8 @@ object Layout {
       // the superseded file set retires under ITS generation's dir —
       // retained for readDirAt pins until vacuum ages it out (r19: pin
       // depth IS the retention policy, the Delta discipline)
-      retireTo(fs, dst, s"_pre_swap/g$genBefore", prior)
-      if (prior.nonEmpty) {
-        // partition dirs the swap emptied would linger as stale col=value
-        // entries; prune fully-empty ones bottom-up
-        def prune(p: org.apache.hadoop.fs.Path): Unit =
-          fs.listStatus(p).foreach { s =>
-            val n = s.getPath.getName
-            if (s.isDirectory && !n.startsWith("_") && !n.startsWith(".")) {
-              prune(s.getPath)
-              if (fs.listStatus(s.getPath).isEmpty) fs.delete(s.getPath, false)
-            }
-          }
-        prune(dst)
-      }
+      retireTo(fs, dst, Manifest.preSwap(genBefore), prior)
+      if (prior.nonEmpty) pruneEmptyDirs(fs, dst)
     } finally if (fs.exists(tmp)) fs.delete(tmp, true)
     }
   }
@@ -607,7 +616,7 @@ object Layout {
 
   /** Read a layout-managed table through its MANIFEST when one exists.
     *
-    * The manifest (`_manifest-<gen>.json`, written LAST by every layout
+    * The manifest (a [[Manifest]] generation, written LAST by every layout
     * writer, read FIRST here) is the one-file answer to the swap windows
     * [[mergeBucketed]]/[[compactBucketed]] document: their file moves are
     * one-at-a-time, so a reader in another process listing the directory
@@ -681,17 +690,102 @@ object Layout {
     fileNameFiltered(spark.table(table), valid)
   }
 
+  /** The flat data files at `loc` (hidden and underscore names skipped). */
+  private def listDataFiles(fs: org.apache.hadoop.fs.FileSystem,
+      loc: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(loc).filter(s => s.isFile && !s.getPath.getName.startsWith("_")
+      && !s.getPath.getName.startsWith("."))
+
   private def dataFileNames(fs: org.apache.hadoop.fs.FileSystem,
       loc: org.apache.hadoop.fs.Path): Set[String] =
-    fs.listStatus(loc)
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_")
-        && !s.getPath.getName.startsWith("."))
-      .map(_.getPath.getName).toSet
+    listDataFiles(fs, loc).map(_.getPath.getName).toSet
 
-  private val manifestRe = java.util.regex.Pattern.compile("^_manifest-(\\d+)\\.json$")
+  /** The ONE manifest codec. Every decision about the on-disk version log
+    * lives here, so the writer and every reader and sweeper agree by
+    * construction: the generation file name (`_manifest-<gen>.json`),
+    * generation listing and parsing, the `{"gen","hwm","files"}` body
+    * (written and read), and the per-generation retirement dirs
+    * (`_pre_merge/g<N>`, `_pre_swap/g<N>`) superseded files park in.
+    */
+  private object Manifest {
+    private val nameRe = java.util.regex.Pattern.compile("^_manifest-(\\d+)\\.json$")
+    private val filesRe = java.util.regex.Pattern
+      .compile("\"files\":\\[(.*)\\]", java.util.regex.Pattern.DOTALL)
+    private val quotedRe = java.util.regex.Pattern.compile("\"([^\"]*)\"")
+    private val hwmRe = java.util.regex.Pattern.compile("\"hwm\":(-?\\d+)")
+
+    def path(loc: org.apache.hadoop.fs.Path, gen: Long): org.apache.hadoop.fs.Path =
+      new org.apache.hadoop.fs.Path(loc, s"_manifest-$gen.json")
+
+    /** The generation a file name encodes; None for any other name. */
+    def genOf(name: String): Option[Long] = {
+      val m = nameRe.matcher(name)
+      if (m.matches()) Some(m.group(1).toLong) else None
+    }
+
+    /** Generations retained at `loc`, ascending. */
+    def gens(fs: org.apache.hadoop.fs.FileSystem,
+        loc: org.apache.hadoop.fs.Path): Seq[Long] =
+      fs.listStatus(loc).toSeq.flatMap(s => genOf(s.getPath.getName)).sorted
+
+    /** See [[writeManifest]]. */
+    def write(fs: org.apache.hadoop.fs.FileSystem, loc: org.apache.hadoop.fs.Path,
+        names: Iterable[String], hwm: Long): Unit = {
+      val gen = gens(fs, loc).lastOption.getOrElse(0L) + 1
+      // the parse below is a symmetric quoted-string scan, not a JSON
+      // parser — a name that would need escaping must fail loudly rather
+      // than round-trip corrupted (no Spark-written file ever contains
+      // these characters)
+      names.foreach(n => require(!n.contains("\"") && !n.contains("\\"),
+        s"manifest cannot serialize file name '$n'"))
+      val json = names.toSeq.sorted
+        .map(n => "\"" + n + "\"")
+        .mkString(s"""{"gen":$gen,"hwm":$hwm,"files":[""", ",", "]}")
+      val tmp = new org.apache.hadoop.fs.Path(loc, s"._manifest-$gen.tmp")
+      val out = fs.create(tmp, true)
+      try out.write(json.getBytes("UTF-8")) finally out.close()
+      require(fs.rename(tmp, path(loc, gen)), s"manifest rename failed in $loc")
+    }
+
+    /** Generation `gen`'s (file set, ingest hwm); a pre-hwm body (older
+      * layout version) parses as hwm −1, "no batch ever committed".
+      */
+    def read(fs: org.apache.hadoop.fs.FileSystem, loc: org.apache.hadoop.fs.Path,
+        gen: Long): (Set[String], Long) = {
+      val p = path(loc, gen)
+      val in = fs.open(p)
+      val body = try {
+        val buf = new java.io.ByteArrayOutputStream()
+        val chunk = new Array[Byte](8192)
+        var n = in.read(chunk)
+        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
+        buf.toString("UTF-8")
+      } finally in.close()
+      // symmetric with write: every quoted string inside the files array,
+      // whatever its suffix — a .parquet-only pattern would silently drop
+      // any differently-named data file from every read (r17 review)
+      val arr = filesRe.matcher(body)
+      require(arr.find(), s"malformed manifest ${p.getName}")
+      val m = quotedRe.matcher(arr.group(1))
+      val names = Set.newBuilder[String]
+      while (m.find()) names += m.group(1)
+      val hm = hwmRe.matcher(body)
+      (names.result(), if (hm.find()) hm.group(1).toLong else -1L)
+    }
+
+    private val preMergeRoot = "_pre_merge"
+    private val preSwapRoot = "_pre_swap"
+    /** The retirement roots, each holding one `g<N>` dir per generation. */
+    val retirementRoots: Seq[String] = Seq(preMergeRoot, preSwapRoot)
+    def preMerge(gen: Long): String = s"$preMergeRoot/g$gen"
+    def preSwap(gen: Long): String = s"$preSwapRoot/g$gen"
+    def isGenDir(name: String): Boolean = name.matches("g\\d+")
+    /** A retirement-root-relative path inside some `g<N>` dir. */
+    def inGenDir(rel: String): Boolean = rel.matches("g\\d+/.*")
+  }
 
   /** Replace the table's manifest with `names` at the next generation:
-    * write `_manifest-<gen+1>.json` via a hidden temp + atomic rename —
+    * write generation gen+1 via a hidden temp + atomic rename —
     * at every instant a lister sees ≥1 complete manifest, and the highest
     * gen is always whole. Older generations are RETAINED (r19): they are
     * the version log [[readTableAt]]/[[readDirAt]] pin against — a few
@@ -708,69 +802,21 @@ object Layout {
     */
   private[graft] def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
       loc: org.apache.hadoop.fs.Path, names: Iterable[String],
-      hwm: Long = -1L): Unit = {
-    val old = fs.listStatus(loc).map(_.getPath)
-      .filter(p => manifestRe.matcher(p.getName).matches())
-    val gen = old.map { p =>
-      val m = manifestRe.matcher(p.getName); m.matches(); m.group(1).toLong
-    }.foldLeft(0L)(math.max) + 1
-    // the parse below is a symmetric quoted-string scan, not a JSON
-    // parser — a name that would need escaping must fail loudly rather
-    // than round-trip corrupted (no Spark-written file ever contains
-    // these characters)
-    names.foreach(n => require(!n.contains("\"") && !n.contains("\\"),
-      s"manifest cannot serialize file name '$n'"))
-    val json = names.toSeq.sorted
-      .map(n => "\"" + n + "\"")
-      .mkString(s"""{"gen":$gen,"hwm":$hwm,"files":[""", ",", "]}")
-    val tmp = new org.apache.hadoop.fs.Path(loc, s"._manifest-$gen.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    require(fs.rename(tmp, new org.apache.hadoop.fs.Path(loc, f"_manifest-$gen%d.json")),
-      s"manifest rename failed in $loc")
-  }
+      hwm: Long = -1L): Unit =
+    Manifest.write(fs, loc, names, hwm)
 
   /** Highest-generation manifest as (gen, file set, ingest hwm); None when
-    * the table carries no manifest. A pre-hwm manifest (older layout
-    * version) parses as hwm −1 — "no streaming batch ever committed". A
-    * generation deleted between the listing and the read (a writer
-    * finishing its swap) is retried against a fresh listing.
+    * the table carries no manifest. A generation deleted between the
+    * listing and the read (a writer finishing its swap) is retried against
+    * a fresh listing.
     */
   private[graft] def readManifest(fs: org.apache.hadoop.fs.FileSystem,
       loc: org.apache.hadoop.fs.Path): Option[(Long, Set[String], Long)] = {
-    def attempt(): Option[(Long, Set[String], Long)] = {
-      val gens = fs.listStatus(loc).map(_.getPath)
-        .filter(p => manifestRe.matcher(p.getName).matches())
-      if (gens.isEmpty) None
-      else {
-        val (latest, latestGen) = gens.map { p =>
-          val m = manifestRe.matcher(p.getName); m.matches()
-          (p, m.group(1).toLong)
-        }.maxBy(_._2)
-        val in = fs.open(latest)
-        val body = try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val chunk = new Array[Byte](8192)
-          var n = in.read(chunk)
-          while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-          buf.toString("UTF-8")
-        } finally in.close()
-        // symmetric with writeManifest: every quoted string inside the
-        // files array, whatever its suffix — a .parquet-only pattern
-        // would silently drop any differently-named data file from every
-        // read (r17 review)
-        val arr = java.util.regex.Pattern
-          .compile("\"files\":\\[(.*)\\]", java.util.regex.Pattern.DOTALL)
-          .matcher(body)
-        require(arr.find(), s"malformed manifest ${latest.getName}")
-        val m = java.util.regex.Pattern.compile("\"([^\"]*)\"").matcher(arr.group(1))
-        val names = Set.newBuilder[String]
-        while (m.find()) names += m.group(1)
-        val hm = java.util.regex.Pattern.compile("\"hwm\":(-?\\d+)").matcher(body)
-        val hwm = if (hm.find()) hm.group(1).toLong else -1L
-        Some((latestGen, names.result(), hwm))
+    def attempt(): Option[(Long, Set[String], Long)] =
+      Manifest.gens(fs, loc).lastOption.map { gen =>
+        val (names, hwm) = Manifest.read(fs, loc, gen)
+        (gen, names, hwm)
       }
-    }
     try attempt()
     catch { case _: java.io.FileNotFoundException => try attempt() catch {
       case _: java.io.FileNotFoundException => None } }
@@ -782,11 +828,7 @@ object Layout {
   def generations(spark: SparkSession, dir: String): Seq[Long] = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).map(_.getPath.getName).toSeq
-      .flatMap { n => val m = manifestRe.matcher(n)
-        if (m.matches()) Some(m.group(1).toLong) else None }
-      .sorted
+    if (!fs.exists(root)) Seq.empty else Manifest.gens(fs, root)
   }
 
   /** [[generations]] for a catalog table. */
@@ -798,30 +840,11 @@ object Layout {
     */
   private def readManifestGen(fs: org.apache.hadoop.fs.FileSystem,
       loc: org.apache.hadoop.fs.Path, gen: Long): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(loc, s"_manifest-$gen.json")
-    if (!fs.exists(p)) {
-      val have = fs.listStatus(loc).map(_.getPath.getName)
-        .flatMap { n => val m = manifestRe.matcher(n)
-          if (m.matches()) Some(m.group(1).toLong) else None }.sorted
+    if (!fs.exists(Manifest.path(loc, gen)))
       sys.error(s"generation $gen is not retained at $loc (vacuumed or " +
-        s"never written); retained generations: ${have.mkString("[", ",", "]")}")
-    }
-    val in = fs.open(p)
-    val body = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      buf.toString("UTF-8")
-    } finally in.close()
-    val arr = java.util.regex.Pattern
-      .compile("\"files\":\\[(.*)\\]", java.util.regex.Pattern.DOTALL)
-      .matcher(body)
-    require(arr.find(), s"malformed manifest ${p.getName}")
-    val m = java.util.regex.Pattern.compile("\"([^\"]*)\"").matcher(arr.group(1))
-    val names = Set.newBuilder[String]
-    while (m.find()) names += m.group(1)
-    names.result()
+        s"never written); retained generations: " +
+        Manifest.gens(fs, loc).mkString("[", ",", "]"))
+    Manifest.read(fs, loc, gen)._1
   }
 
   /** GENERATION-PINNED read (time travel — Delta `VERSION AS OF` for this
@@ -867,17 +890,17 @@ object Layout {
       // columns, never the gN component itself); the bare retirement
       // root remains a residence for pre-r19 flat retirements, with gN
       // subtrees excluded from its walk to avoid double-listing
-      val retRoots = Seq("_pre_merge", "_pre_swap")
+      val retRoots = Manifest.retirementRoots
         .map(new org.apache.hadoop.fs.Path(root, _))
       val genDirs = retRoots.flatMap { r =>
         if (!fs.exists(r)) Seq.empty
         else fs.listStatus(r).filter(s => s.isDirectory
-          && s.getPath.getName.matches("g\\d+")).map(_.getPath).toSeq
+          && Manifest.isGenDir(s.getPath.getName)).map(_.getPath).toSeq
       }
       val residences = Seq(root) ++ retRoots ++ genDirs
       def ownRels(r: org.apache.hadoop.fs.Path): Seq[String] = {
         val rels = relDataFiles(fs, r)
-        if (retRoots.contains(r)) rels.filterNot(_.matches("g\\d+/.*")) else rels
+        if (retRoots.contains(r)) rels.filterNot(Manifest.inGenDir) else rels
       }
       // ALL occurrences of each wanted basename, not first-wins: ONE write
       // job reuses a part name across `col=value` partition subdirs (task 0
@@ -943,13 +966,6 @@ object Layout {
     }
   }
 
-  /** Compact a directory of small parquet files into ~`targetFileBytes`
-    * outputs — the standard maintenance pass after streaming/incremental
-    * ingest (thousands of tiny files per trigger kill scan parallelism
-    * bookkeeping and NameNode/liststore load at 100 TB). Partition count is
-    * sized from the actual input bytes; `repartition` (round-robin, no
-    * key) rebalances evenly without assuming any distribution.
-    */
   /** Retention maintenance for layout-managed locations — the VACUUM of
     * this layer (Delta/Iceberg's analogue, scoped to what this layer
     * actually retires): every swap/merge/crash-heal PARKS superseded
@@ -974,7 +990,7 @@ object Layout {
     *      ADVICE: nothing else ever reclaims these, so a crash-prone
     *      continuous ingest cadence leaked disk without bound — and
     *      their task files can hold row bytes, the forgetKeys hole);
-    *   3. `_manifest-<gen>.json` below the newest generation —
+    *   3. [[Manifest]] generation files below the newest generation —
     *      retained for [[readTableAt]]/[[readDirAt]] pinned reads, and
     *      reclaimed here once older than the retention (a vacuumed
     *      generation's pinned read then fails LOUDLY, never partially).
@@ -1025,18 +1041,15 @@ object Layout {
       if (seen.isEmpty) System.currentTimeMillis() else seen.max
     }
     val cutoff = refInstant - retentionMs
-    val latestGen = entries.map(_.getPath.getName)
-      .flatMap { n => val m = manifestRe.matcher(n)
-        if (m.matches()) Some(m.group(1).toLong) else None }
+    val latestGen = entries.flatMap(s => Manifest.genOf(s.getPath.getName))
       .foldLeft(-1L)(math.max)
     var reclaimed = 0L
     entries.foreach { s =>
       val n = s.getPath.getName
-      val retirementDir = s.isDirectory && (n == "_pre_merge" || n == "_pre_swap")
+      val retirementDir = s.isDirectory && Manifest.retirementRoots.contains(n)
       val stagingDir = s.isDirectory && (n == "_temporary"
         || n.startsWith(".swap-") || n.startsWith(".spark-staging-"))
-      val m = manifestRe.matcher(n)
-      val staleManifest = s.isFile && m.matches() && m.group(1).toLong < latestGen
+      val staleManifest = s.isFile && Manifest.genOf(n).exists(_ < latestGen)
       if (retirementDir) {
         // retirement is PER-GENERATION (g<N> subdirs): each generation
         // ages independently — old epochs reclaim while recent ones stay
@@ -1044,7 +1057,7 @@ object Layout {
         // age under the whole-dir rule; an emptied dir is deleted
         // unconditionally (it holds no bytes).
         fs.listStatus(s.getPath).foreach { c =>
-          if (c.isDirectory && c.getPath.getName.matches("g\\d+")
+          if (c.isDirectory && Manifest.isGenDir(c.getPath.getName)
               && newest(c) <= cutoff) {
             reclaimed += countFiles(c.getPath)
             fs.delete(c.getPath, true)
@@ -1189,17 +1202,9 @@ object Layout {
     * location's manifest generations — pinned reads don't cross it.
     */
   def renameColumn(spark: SparkSession, table: String, from: String,
-      to: String): Unit =
-    layoutLock.synchronized { tableLock(table).synchronized {
-      require(!to.contains("`"), s"renameColumn: '$to' contains a backtick")
-      val ident = org.apache.spark.sql.catalyst.TableIdentifier(table)
-      val catalog = spark.sessionState.catalog
-      val staging = s"${table}_renaming"
-      if (!spark.catalog.tableExists(table) && spark.catalog.tableExists(staging))
-        spark.sql(s"ALTER TABLE `$staging` RENAME TO `$table`")
-      require(spark.catalog.tableExists(table),
-        s"renameColumn target '$table' does not exist")
-      val schema = spark.table(table).schema
+      to: String): Unit = {
+    require(!to.contains("`"), s"renameColumn: '$to' contains a backtick")
+    rebuildBucketed(spark, table, "renameColumn", "renaming") { schema =>
       require(schema.fields.exists(_.name.equalsIgnoreCase(from)),
         s"renameColumn: '$from' does not exist on '$table'")
       require(!schema.fields.exists(_.name.equalsIgnoreCase(to)),
@@ -1207,25 +1212,16 @@ object Layout {
       require(!droppedColumns(spark, table).contains(to.toLowerCase),
         s"renameColumn: '$to' was previously dropped and its bytes remain " +
           "— compactBucketed first (the resurrection guard, as in addColumn)")
-      val spec = catalog.getTableMetadata(ident).bucketSpec.getOrElse(sys.error(
-        s"renameColumn target '$table' is not bucketed"))
+      val spec = spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
+        .bucketSpec.getOrElse(sys.error(s"renameColumn target '$table' is not bucketed"))
       require(spec.bucketColumnNames.size == 1,
         s"renameColumn supports single-column bucket specs, '$table' has ${spec.bucketColumnNames}")
       val oldKey = spec.bucketColumnNames.head
       val newKey = if (oldKey.equalsIgnoreCase(from)) to else oldKey
-      val locPath = tablePath(spark, table)
-      val fs = locPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val (src, hwm) = readManifest(fs, locPath) match {
-        case Some((_, valid, h)) =>
-          (spark.read.schema(schema).parquet(valid.toSeq.sorted
-            .map(n => new org.apache.hadoop.fs.Path(locPath, n).toString): _*), h)
-        case None => (spark.read.schema(schema).parquet(locPath.toString), -1L)
-      }
-      writeBucketed(src.withColumnRenamed(from, to), staging, newKey,
-        spec.numBuckets, hwm)
-      spark.sql(s"DROP TABLE `$table`")
-      spark.sql(s"ALTER TABLE `$staging` RENAME TO `$table`")
-    }}
+      (_.withColumnRenamed(from, to), newKey, spec.numBuckets)
+    }
+  }
 
   /** Right-to-erasure on a bucketed table (GDPR Art. 17 — the DELETE +
     * VACUUM(0) discipline): tombstone-merge every row whose `key` is in
@@ -1268,23 +1264,11 @@ object Layout {
     val buckets = meta.bucketSpec.getOrElse(sys.error(
       s"forgetKeys target '$table' is not bucketed")).numBuckets
     val schema = spark.table(table).schema
-    val keyType = schema(key).dataType
-    val inType = keys.schema(keys.columns.head).dataType
-    require(inType == keyType,
-      s"forgetKeys ids are ${inType.simpleString} but the table key is " +
-        s"${keyType.simpleString} — cast the id batch EXACTLY upstream " +
-        "(a silent cast could truncate/wrap and erase the wrong key)")
     // ONE lease spans tombstone-merge AND purge: the erasure guarantee is
     // their conjunction, and a foreign writer landing between them could
     // re-park recoverable copies the purge already swept
-    withWriterLease(spark, tablePath(spark, table)) {
-    val kRdd = keys.select(col(keys.columns.head).as(key))
-      .where(col(key).isNotNull).distinct().rdd
-    kRdd.localCheckpoint()
-    val k = spark.createDataFrame(kRdd,
-      org.apache.spark.sql.types.StructType(Seq(schema(key).copy(name = key))))
-    try {
-      val nKeys = k.count()
+    withErasureKeys(spark, tablePath(spark, table), "forgetKeys", "the table key",
+        schema(key), keys) { (k, nKeys) =>
       // a full-schema all-tombstone delta in ONE projection (per-column
       // withColumn is the quadratic-analyzer anti-pattern on wide tables):
       // non-key columns ride as typed nulls — they never land, the
@@ -1303,7 +1287,33 @@ object Layout {
         purgeResidualDirs(fs, loc)
       }
       nKeys
-    } finally kRdd.unpersist(blocking = false)
+    }
+  }
+
+  /** The ONE erasure key pin of [[forgetKeys]] and [[forgetKeysDir]]:
+    * dtype check, then under the writer lease on `loc` the ids are
+    * distinct'd and pinned (localCheckpoint) and `erase` gets them with
+    * their count.
+    */
+  private def withErasureKeys[T](spark: SparkSession,
+      loc: org.apache.hadoop.fs.Path, op: String, keyNoun: String,
+      keyField: org.apache.spark.sql.types.StructField, keys: DataFrame)(
+      erase: (DataFrame, Long) => T): T = {
+    import org.apache.spark.sql.functions.col
+    val key = keyField.name
+    val inType = keys.schema(keys.columns.head).dataType
+    require(inType == keyField.dataType,
+      s"$op ids are ${inType.simpleString} but $keyNoun is " +
+        s"${keyField.dataType.simpleString} — cast the id batch EXACTLY upstream " +
+        "(a silent cast could truncate/wrap and erase the wrong key)")
+    withWriterLease(spark, loc) {
+      val kRdd = keys.select(col(keys.columns.head).as(key))
+        .where(col(key).isNotNull).distinct().rdd
+      kRdd.localCheckpoint()
+      val k = spark.createDataFrame(kRdd,
+        org.apache.spark.sql.types.StructType(Seq(keyField)))
+      try erase(k, k.count())
+      finally kRdd.unpersist(blocking = false)
     }
   }
 
@@ -1344,20 +1354,8 @@ object Layout {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(root), s"forgetKeysDir: $dir does not exist")
     val base = readDir(spark, dir)
-    val keyType = base.schema(key).dataType
-    val inType = keys.schema(keys.columns.head).dataType
-    require(inType == keyType,
-      s"forgetKeysDir ids are ${inType.simpleString} but the key column is " +
-        s"${keyType.simpleString} — cast the id batch EXACTLY upstream " +
-        "(a silent cast could truncate/wrap and erase the wrong key)")
-    withWriterLease(spark, root) {
-    val kRdd = keys.select(col(keys.columns.head).as(key))
-      .where(col(key).isNotNull).distinct().rdd
-    kRdd.localCheckpoint()
-    val k = spark.createDataFrame(kRdd,
-      org.apache.spark.sql.types.StructType(Seq(base.schema(key).copy(name = key))))
-    try {
-      val nKeys = k.count()
+    withErasureKeys(spark, root, "forgetKeysDir", "the key column",
+        base.schema(key), keys) { (k, nKeys) =>
       val qualBase = fs.makeQualified(root).toUri.getPath.stripSuffix("/") + "/"
       // the files that HOLD a requested key — input_file_name pinned at
       // the scan (before the join, where lineage would be stage-dependent)
@@ -1393,13 +1391,7 @@ object Layout {
           val w = kept.write.mode("overwrite")
           (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
             .parquet(tmp.toString)
-          val fresh = relDataFiles(fs, tmp)
-          fresh.foreach { rel =>
-            val to = new org.apache.hadoop.fs.Path(root, rel)
-            fs.mkdirs(to.getParent)
-            require(fs.rename(new org.apache.hadoop.fs.Path(tmp, rel), to),
-              s"forgetKeysDir: rename $rel into $root failed")
-          }
+          val fresh = moveIn(fs, tmp, root, "forgetKeysDir")
           val affectedNames = affectedRels
             .map(r => new org.apache.hadoop.fs.Path(r).getName).toSet
           // remove only names with NO remaining unaffected occurrence
@@ -1428,10 +1420,8 @@ object Layout {
       // fails loudly at the generation lookup instead.
       val (curGen, live) = readManifest(fs, root).map(m => (m._1, m._2))
         .getOrElse((-1L, Set.empty[String]))
-      fs.listStatus(root).map(_.getPath).foreach { p =>
-        val m = manifestRe.matcher(p.getName)
-        if (m.matches() && m.group(1).toLong < curGen) fs.delete(p, false)
-      }
+      Manifest.gens(fs, root).filter(_ < curGen)
+        .foreach(g => fs.delete(Manifest.path(root, g), false))
       relDataFiles(fs, root).foreach { rel =>
         if (!live.contains(new org.apache.hadoop.fs.Path(rel).getName)) {
           val p = new org.apache.hadoop.fs.Path(root, rel)
@@ -1441,20 +1431,8 @@ object Layout {
         }
       }
       purgeResidualDirs(fs, root)
-      // partition dirs the erasure emptied linger as stale col=value
-      // entries; prune bottom-up (cosmetic, but a scan of an empty dir
-      // tree is wasted listing at scale)
-      def prune(p: org.apache.hadoop.fs.Path): Unit =
-        fs.listStatus(p).foreach { s =>
-          val n = s.getPath.getName
-          if (s.isDirectory && !n.startsWith("_") && !n.startsWith(".")) {
-            prune(s.getPath)
-            if (fs.listStatus(s.getPath).isEmpty) fs.delete(s.getPath, false)
-          }
-        }
-      prune(root)
+      pruneEmptyDirs(fs, root)
       nKeys
-    } finally kRdd.unpersist(blocking = false)
     }
   }
 
@@ -1466,13 +1444,13 @@ object Layout {
     * crashed Spark write job's hidden task staging (`_temporary`,
     * `.spark-staging-*`) — the r18 ADVICE hole: an append/merge that
     * crashed MID-JOB leaves committed task files under those dirs whose
-    * bytes can still hold the erased keys' rows. Old `_manifest-*.json`
+    * bytes can still hold the erased keys' rows. Old [[Manifest]]
     * generations stay (they name files, they hold no row bytes) — a
     * pinned read of a purged generation fails loudly at resolve time.
     */
   private def purgeResidualDirs(fs: org.apache.hadoop.fs.FileSystem,
       loc: org.apache.hadoop.fs.Path): Unit = {
-    val fixed = Seq("_pre_merge", "_pre_swap", "_temporary")
+    val fixed = (Manifest.retirementRoots :+ "_temporary")
       .map(new org.apache.hadoop.fs.Path(loc, _))
     val staged = fs.listStatus(loc).map(_.getPath).filter { p =>
       p.getName.startsWith(".swap-") || p.getName.startsWith(".spark-staging-")
@@ -1483,6 +1461,13 @@ object Layout {
     }
   }
 
+  /** Compact a directory of small parquet files into ~`targetFileBytes`
+    * outputs — the standard maintenance pass after streaming/incremental
+    * ingest (thousands of tiny files per trigger kill scan parallelism
+    * bookkeeping and NameNode/liststore load at 100 TB). Partition count is
+    * sized from the actual input bytes; `repartition` (round-robin, no
+    * key) rebalances evenly without assuming any distribution.
+    */
   def compact(spark: SparkSession, inDir: String, outDir: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     val in = new org.apache.hadoop.fs.Path(inDir)
@@ -1625,29 +1610,6 @@ object Layout {
       tmp => clustered.write.mode("overwrite").parquet(tmp))
   }
 
-  /** Rewrite a bucketed table in place: read → one file per bucket through
-    * the SAME [[bucketWriter]] recipe → staged swap (staging table, drop,
-    * rename). This is the maintenance pass that bounds
-    * [[appendBucketed]]'s files-per-bucket growth — plain [[compact]]
-    * round-robins rows and would DESTROY the bucket hash. Passing a new
-    * (power-of-two) `buckets` is the re-bucketing path for a grown corpus;
-    * passing the current count is pure compaction. Zero-Exchange plans and
-    * row content are preserved either way (LayoutSpec pins both).
-    *
-    * SINGLE-WRITER contract: pause the append stream across the swap — a
-    * micro-batch landing between the staging write's scan and the DROP
-    * would be lost (the same no-ACID caveat as OPTIMIZE on any
-    * metastore table without a transaction log; LayoutSpec's streaming
-    * test compacts with the stream quiesced, the real cadence). Crash
-    * safety: the data is never in fewer than one place — a crash before
-    * DROP leaves the original intact (plus a `_compacting` leftover that
-    * the next run's writeBucketed preamble clears), a crash between DROP
-    * and RENAME leaves the FULL table under `<table>_compacting` — and a
-    * later call AUTO-RECOVERS it (one RENAME back) before compacting. The
-    * whole pass holds [[layoutLock]], the same monitor the session-scoped
-    * layout queries take, so a concurrent reader never resolves the name
-    * inside the DROP→RENAME window (ADVICE r14).
-    */
   /** Parse the bucket id Spark encodes in a bucketed file name
     * (`part-00000-<uuid>_00003.c000.snappy.parquet` → 3); None for
     * non-bucketed names.
@@ -1758,9 +1720,7 @@ object Layout {
       val affected = pinned
         .select(pmod(hash(col(key)), lit(buckets)).as("b")).distinct()
         .collect().map(_.getInt(0)).toSet
-      val listed = fs.listStatus(loc)
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_")
-          && !s.getPath.getName.startsWith("."))
+      val listed = listDataFiles(fs, loc)
       // every data file must place into a bucket: a file whose name parses
       // no bucket id (foreign write path, hand-renamed file) would be
       // classified "untouched" and keep stale rows for replaced keys —
@@ -1800,18 +1760,9 @@ object Layout {
       val staging = s"${table}_merging"
       writeBucketed(merged, staging, key, buckets)
       val stagingLoc = tablePath(spark, staging)
-      // new files in, manifest, old files out (retire, don't delete).
-      // rename() reports failure as `false`, not an exception — an
-      // unchecked false on the move-in would silently drop the delta from
-      // the table
-      def mv(from: org.apache.hadoop.fs.Path, to: org.apache.hadoop.fs.Path): Unit =
-        require(fs.rename(from, to), s"mergeBucketed: rename $from -> $to failed")
-      val movedIn = fs.listStatus(stagingLoc)
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-        .map { s =>
-          mv(s.getPath, new org.apache.hadoop.fs.Path(loc, s.getPath.getName))
-          s.getPath.getName
-        }
+      // new files in, manifest, old files out (retire, don't delete)
+      val movedIn = listDataFiles(fs, stagingLoc).map(_.getPath.getName)
+      moveRels(fs, stagingLoc, loc, movedIn, "mergeBucketed")
       // manifest BETWEEN move-in and retirement: a reader that lists
       // before this line resolves the old manifest → the pre-merge file
       // set (all still present); after it → untouched + new files. At no
@@ -1832,12 +1783,8 @@ object Layout {
       // the retention horizon stays [[readTableAt]]-pinnable and
       // hand-recoverable (the r16 bounded-growth rationale predates
       // vacuum's existence).
-      if (oldAffected.nonEmpty || orphans.nonEmpty) {
-        val retired = new org.apache.hadoop.fs.Path(loc, s"_pre_merge/g$priorGen")
-        fs.mkdirs(retired)
-        (oldAffected ++ orphans).foreach(s => mv(s.getPath,
-          new org.apache.hadoop.fs.Path(retired, s.getPath.getName)))
-      }
+      retireTo(fs, loc, Manifest.preMerge(priorGen),
+        (oldAffected ++ orphans).map(_.getPath.getName))
       spark.sql(s"DROP TABLE `$staging`")
       spark.catalog.refreshTable(table)
     } finally deltaRdd.unpersist(blocking = false)
@@ -1956,14 +1903,8 @@ object Layout {
       // advance the mark we just checked
       withWriterLease(spark, loc) {
       val hwm = readManifest(fs, loc).map(_._3).getOrElse(-1L)
-      if (batchId <= hwm) {
-        // same blind spot as appendBucketedBatch at hwm == 0, same loud
-        // reject for a fresh checkpoint's batch 0 against a positive mark
-        require(batchId > 0 || hwm <= 0,
-          s"maintainAdditiveBatch got batch id 0 but '$table' has ingest hwm $hwm — " +
-            "a fresh checkpoint must target a fresh table (or carry the old checkpoint)")
-        false
-      } else {
+      if (batchApplied("maintainAdditiveBatch", table, batchId, hwm)) false
+      else {
         maintainAdditive(spark, table, key, buckets, batch, stampHwm = Some(batchId))
         true
       }
@@ -1983,16 +1924,51 @@ object Layout {
       ()
     }
 
+  /** Rewrite a bucketed table in place: read → one file per bucket through
+    * the SAME [[bucketWriter]] recipe → staged swap (staging table, drop,
+    * rename). This is the maintenance pass that bounds
+    * [[appendBucketed]]'s files-per-bucket growth — plain [[compact]]
+    * round-robins rows and would DESTROY the bucket hash. Passing a new
+    * (power-of-two) `buckets` is the re-bucketing path for a grown corpus;
+    * passing the current count is pure compaction. Zero-Exchange plans and
+    * row content are preserved either way (LayoutSpec pins both).
+    *
+    * SINGLE-WRITER contract: pause the append stream across the swap — a
+    * micro-batch landing between the staging write's scan and the DROP
+    * would be lost (the same no-ACID caveat as OPTIMIZE on any
+    * metastore table without a transaction log; LayoutSpec's streaming
+    * test compacts with the stream quiesced, the real cadence). Crash
+    * safety: the data is never in fewer than one place — a crash before
+    * DROP leaves the original intact (plus a `_compacting` leftover that
+    * the next run's writeBucketed preamble clears), a crash between DROP
+    * and RENAME leaves the FULL table under `<table>_compacting` — and a
+    * later call AUTO-RECOVERS it (one RENAME back) before compacting. The
+    * whole pass holds [[layoutLock]], the same monitor the session-scoped
+    * layout queries take, so a concurrent reader never resolves the name
+    * inside the DROP→RENAME window (ADVICE r14).
+    */
   def compactBucketed(spark: SparkSession, table: String, key: String,
       buckets: Int): Unit =
+    rebuildBucketed(spark, table, "compactBucketed", "compacting")(
+      _ => (identity, key, buckets))
+
+  /** The ONE catalog-schema rebuild of [[compactBucketed]] and
+    * [[renameColumn]]: `plan` validates the catalog schema and returns the
+    * reshape, bucket key and bucket count; the manifest view is rewritten
+    * into `<table>_<suffix>` and renamed over the table.
+    */
+  private def rebuildBucketed(spark: SparkSession, table: String, op: String,
+      suffix: String)(
+      plan: org.apache.spark.sql.types.StructType => (DataFrame => DataFrame, String, Int)
+  ): Unit =
     layoutLock.synchronized { tableLock(table).synchronized {
-    val staging = s"${table}_compacting"
+    val staging = s"${table}_$suffix"
     // auto-recover a crash between a previous run's DROP and RENAME: the
     // full table is sitting under the staging name
     if (!spark.catalog.tableExists(table) && spark.catalog.tableExists(staging))
       spark.sql(s"ALTER TABLE `$staging` RENAME TO `$table`")
     require(spark.catalog.tableExists(table),
-      s"compactBucketed target '$table' does not exist")
+      s"$op target '$table' does not exist")
     // Read the table's FILES, not the catalog table: when the source scan
     // is the bucketed table itself the planner elides bucketWriter's
     // aligning repartition as redundant — and then auto-disables the
@@ -2024,16 +2000,17 @@ object Layout {
     // — the fresh staging table carries no droppedColumns property),
     // added columns materialize as real null columns.
     val tblSchema = spark.table(table).schema
+    val (reshape, key, buckets) = plan(tblSchema)
     withWriterLease(spark, locPath) {
-    val (src, hwm) = readManifest(fs, locPath) match {
-      case Some((_, valid, h)) =>
-        (spark.read.schema(tblSchema).parquet(valid.toSeq.sorted
-          .map(n => new org.apache.hadoop.fs.Path(locPath, n).toString): _*), h)
-      case None => (spark.read.schema(tblSchema).parquet(locPath.toString), -1L)
-    }
-    writeBucketed(src, staging, key, buckets, hwm)
-    spark.sql(s"DROP TABLE `$table`")
-    spark.sql(s"ALTER TABLE `$staging` RENAME TO `$table`")
+      val (src, hwm) = readManifest(fs, locPath) match {
+        case Some((_, valid, h)) =>
+          (spark.read.schema(tblSchema).parquet(valid.toSeq.sorted
+            .map(n => new org.apache.hadoop.fs.Path(locPath, n).toString): _*), h)
+        case None => (spark.read.schema(tblSchema).parquet(locPath.toString), -1L)
+      }
+      writeBucketed(reshape(src), staging, key, buckets, hwm)
+      spark.sql(s"DROP TABLE `$table`")
+      spark.sql(s"ALTER TABLE `$staging` RENAME TO `$table`")
     }
   }}
 }

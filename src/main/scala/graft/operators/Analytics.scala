@@ -543,8 +543,8 @@ object Analytics {
     *
     * Pair generation is two stacked Generates (posexplode + per-element
     * slice) rather than one flatten∘transform comprehension: HOF lambdas
-    * evaluate interpreted per row, and the measured A/B (CopurchaseAB,
-    * sf0.1 best-of-3) has the comprehension at 1.42 s vs 1.06 s for the
+    * evaluate interpreted per row, and the measured A/B (sf0.1
+    * best-of-3) has the comprehension at 1.42 s vs 1.06 s for the
     * explode form on identical output — the 0.81 s basket aggregation is
     * the remaining floor.
     */

@@ -495,7 +495,7 @@ object Dedup {
             s
           }
           val avgLen = math.max(1L, sumLen / math.max(1, n))
-          // Engage budget from the measured kernels (BitsetKernelProbe,
+          // Engage budget from the measured kernels (in-JVM microbenchmark,
           // sf10-shaped block): walk ≈ 900 ns/pair at |g|≈165 (high-overlap
           // pairs defeat the early exit), bitset ≈ 33 ns at stride 16 —
           // ~2 ns per word. Break-even is ~stride 450 ≈ universe 28800 ≈

@@ -102,8 +102,7 @@ object Graph {
     * pregel-as-dataflow layout: at 100 TB the edge table partitioning is
     * the stable asset every pass reuses.
     */
-  def pageRank(spark: SparkSession, dir: String, iters: Int = 5,
-      checkpointEvery: Int = 5): DataFrame = {
+  def pageRank(spark: SparkSession, dir: String, iters: Int = 5): DataFrame = {
     val sym = bipartiteSym(spark, dir)
     // hash-partition AND sort by u BEFORE checkpointing: localCheckpoint
     // preserves outputPartitioning/outputOrdering, so every iteration's
@@ -131,17 +130,17 @@ object Graph {
         .groupBy(col("v").as("id"))
         .agg((lit(150000L) + expr("(85 * sum(c)) div 100")).as("score"))
         .select(col("id"), col("score"))
-      // Checkpoint cadence: every 5 passes by default, ALWAYS including the
+      // Checkpoint cadence: every 5 passes, ALWAYS including the
       // last (a caller running multiple actions on the result otherwise
       // replays the final join+agg on top of the previous checkpoint each
       // time). Lazy, so single-action callers still see exactly one job.
-      // r10's per-pass default was re-A/B'd in r20 (PageRankAB, hashes
-      // identical): per-pass materializes a |V|-row block set per pass that
+      // r10's per-pass cadence was re-A/B'd in r20 (OPTIMIZATION_r20.md,
+      // hashes identical): per-pass materializes a |V|-row block set per pass that
       // the next pass immediately supersedes — cadence 5 measured 2.68→2.09 s
       // at sf0.1 and 11.27→7.40 s at sf1 (best-of-N, one window each). The
       // cadence still bounds lineage depth at 5 joins for any `iters`, so
       // plans stay O(1)-ish and failure replay is capped.
-      if (i % checkpointEvery == 0 || i == iters)
+      if (i % 5 == 0 || i == iters)
         scores = scores.localCheckpoint(false)
     }
     scores

@@ -49,10 +49,10 @@ object Multimodal {
     * synthesis selects identical rows, so outputs are unchanged.
     */
   /** The (n_chars → width, height) synthesis dims, ONE definition shared
-    * by [[mediaTable]]'s column form and the in-JVM
-    * [[graft.MediaKernelProbe]] (which otherwise re-derived the formulas
-    * by hand and would silently measure the wrong shapes if they drifted
-    * — r19 advice). Column overload mirrors the Int one exactly.
+    * by [[mediaTable]]'s column form and in-JVM callers that need the
+    * shapes without the table (a hand re-derivation would silently
+    * measure the wrong shapes if the formulas drifted — r19 advice).
+    * Column overload mirrors the Int one exactly.
     */
   private[graft] def mediaDims(nChars: Int): (Int, Int) =
     (nChars % 64 + 16, nChars % 48 + 9)

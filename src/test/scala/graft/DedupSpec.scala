@@ -385,6 +385,15 @@ class DedupSpec extends GraftSuite {
     }
   }
 
+  test("multi-probe LSH rejects nPlanes < 2 loudly (no 1L << -1 garbage buckets)") {
+    // the probe list flips the TWO lowest-margin planes: with one plane
+    // the second index stays -1 and the shift would wrap silently
+    val e = intercept[IllegalArgumentException] {
+      Ann.lshMultiProbeTopK(spark, sf, nPlanes = 1)
+    }
+    assert(e.getMessage.contains("nPlanes"), e.getMessage)
+  }
+
   test("minhashIncremental == full LSH restricted to batch×corpus pairs") {
     val full = Dedup.minhashLsh(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet // d1 < d2

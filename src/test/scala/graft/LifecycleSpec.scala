@@ -533,12 +533,21 @@ class LifecycleSpec extends GraftSuite {
     val lock = new java.io.File(tableLoc("b_ws"), "_writer.lock")
     assert(lock.createNewFile(), "plant a foreign live lease")
     val delta = Seq((1L, 9L)).toDF("k", "n")
-    val e = intercept[IllegalStateException] {
-      Layout.mergeBucketed(spark, "b_ws", "k", 2, delta)
+    val gens = Layout.tableGenerations(spark, "b_ws")
+    Seq[(String, () => Unit)](
+      "mergeBucketed" -> (() => Layout.mergeBucketed(spark, "b_ws", "k", 2, delta)),
+      "renameColumn" -> (() => Layout.renameColumn(spark, "b_ws", "n", "m")),
+      "appendBucketed" -> (() =>
+        Layout.appendBucketed(Seq((3L, 4L)).toDF("k", "n"), "b_ws", "k", 2))
+    ).foreach { case (op, run) =>
+      val e = intercept[IllegalStateException](run())
+      assert(e.getMessage.contains("another writer"), s"$op: ${e.getMessage}")
+      val t = Layout.readTable(spark, "b_ws")
+      assert(t.columns.toSeq == Seq("k", "n") && t.collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L), (2L, 3L))
+        && Layout.tableGenerations(spark, "b_ws") == gens,
+        s"$op: the reject must precede any mutation")
     }
-    assert(e.getMessage.contains("another writer"), e.getMessage)
-    assert(Layout.readTable(spark, "b_ws").where(col("k") === 1L)
-      .select("n").first().getLong(0) == 2L, "the reject must precede any mutation")
     // crash recovery: age the foreign lock past the stale threshold —
     // broken, taken over, and the op completes
     assert(lock.setLastModified(System.currentTimeMillis() - Layout.leaseStaleMs - 60000L))

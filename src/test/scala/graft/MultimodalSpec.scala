@@ -25,9 +25,8 @@ class MultimodalSpec extends GraftSuite {
       assert(img != null, s"doc ${r.doc_id}: payload is not a decodable image")
       assert(img.getWidth == r.width && img.getHeight == r.height)
     }
-    // the column-form dims stay locked to the shared Int mapping that
-    // MediaKernelProbe measures with (a drift here = the probe silently
-    // measuring wrong shapes)
+    // the column-form dims stay locked to the shared Int mapping (a drift
+    // here = in-JVM callers silently using wrong shapes)
     val dims = graft.io.Tables.documentsMedia(spark, sf)
       .select(col("doc_id"), col("n_chars")).collect()
       .map(r => r.getLong(0) -> Multimodal.mediaDims(r.getLong(1).toInt)).toMap

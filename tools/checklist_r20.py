@@ -1,12 +1,14 @@
 #!/usr/bin/env python3
-"""Emit the OPTIMIZATION_r20.md per-query checklist table from the round's
-committed full-suite windows (base / after-batch-1 / final)."""
+"""Emit the OPTIMIZATION_r20.md per-query checklist table from three
+full-suite bench windows (base / after-batch-1 / final).
+
+Usage: python3 tools/checklist_r20.py [BASE.json MID.json FINAL.json]
+(defaults: the committed r20 windows)."""
 import json
 import sys
 
-base = json.load(open("BENCH_BASE32_r20opt.json"))["queries"]
-mid = json.load(open("BENCH_AFTER1_r20opt.json"))["queries"]
-fin = json.load(open("BENCH_FINAL32_r20opt.json"))["queries"]
+DEFAULTS = ("BENCH_BASE32_r20opt.json", "BENCH_AFTER1_r20opt.json",
+            "BENCH_FINAL32_r20opt.json")
 
 TOUCHED = {
     "q_ann_pq": "PqDtab+AdcSum kernels (−39 % solo A/B)",
@@ -47,21 +49,31 @@ FAMS = [
     ("text / tokens", lambda q: True),  # catch-all, must stay last
 ]
 
-assigned = set()
-out = []
-for fam, pred in FAMS:
-    rows = sorted(q for q in fin if pred(q) and q not in assigned)
-    assigned.update(rows)
-    out.append(f"\n**{fam}** ({len(rows)} queries)\n")
-    out.append("| query | base32 | after-b1 | final | status |")
-    out.append("|---|---|---|---|---|")
-    for q in rows:
-        b = base.get(q)
-        m = mid.get(q)
-        f = fin.get(q)
-        st = TOUCHED.get(q, "examined; unchanged (r19 audit stands)")
-        fmt = lambda v: f"{v:.2f}" if isinstance(v, float) else "—"
-        out.append(f"| {q} | {fmt(b)} | {fmt(m)} | {fmt(f)} | {st} |")
-print("\n".join(out))
-print(f"\nqueries: {len(assigned)}; touched this round: {len(TOUCHED)}",
-      file=sys.stderr)
+
+def main(argv):
+    if len(argv) not in (0, 3):
+        sys.exit(__doc__)
+    base, mid, fin = (json.load(open(p))["queries"]
+                      for p in (argv or DEFAULTS))
+    assigned = set()
+    out = []
+    for fam, pred in FAMS:
+        rows = sorted(q for q in fin if pred(q) and q not in assigned)
+        assigned.update(rows)
+        out.append(f"\n**{fam}** ({len(rows)} queries)\n")
+        out.append("| query | base32 | after-b1 | final | status |")
+        out.append("|---|---|---|---|---|")
+        for q in rows:
+            b = base.get(q)
+            m = mid.get(q)
+            f = fin.get(q)
+            st = TOUCHED.get(q, "examined; unchanged (r19 audit stands)")
+            fmt = lambda v: f"{v:.2f}" if isinstance(v, float) else "—"
+            out.append(f"| {q} | {fmt(b)} | {fmt(m)} | {fmt(f)} | {st} |")
+    print("\n".join(out))
+    print(f"\nqueries: {len(assigned)}; touched this round: {len(TOUCHED)}",
+          file=sys.stderr)
+
+
+if __name__ == "__main__":
+    main(sys.argv[1:])
