@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{DotProduct, Hash60Array, MinHashSig, PackedGrams4,
-  RollingHash31, ShingleHash3, SimHash64, SortedJaccard, SumCentsExact}
+  RollingHash31, ShingleHashN, SimHash64, SortedJaccard, SumCentsExact}
 
 /** SparkSessionExtensions hook exposing the graft codegen kernels as SQL
   * functions — `spark.sql("SELECT graft_dot(a, b) ...")` — so pure-SQL users
@@ -52,7 +52,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((FunctionIdentifier("graft_shingle_hash3"),
       info("graft_shingle_hash3", "graft_shingle_hash3(tokens, mod) - distinct 3-shingle 60-bit hashes"),
       (children: Seq[Expression]) =>
-        ShingleHash3(children(0), longArg(children(1), "graft_shingle_hash3"))))
+        ShingleHashN(children(0), 3, longArg(children(1), "graft_shingle_hash3"), distinct = true)))
     ext.injectFunction((FunctionIdentifier("graft_rolling_hash"),
       info("graft_rolling_hash", "graft_rolling_hash(text, seed, mod) - base-31 polynomial rolling hash"),
       (children: Seq[Expression]) => RollingHash31(children(0),

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: dumps formatted physical plans for the headline queries so
   * pushdown / broadcast / codegen properties can be reviewed and pinned.
   * `sbt "runMain graft.Plans [sfDir] [outFile]"`.
@@ -18,9 +16,7 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def planOf(name: String): String =
       SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI to eyeball any tuple file — schema plus the first N rows — matching
   * the reference's TupleViewer utility
   * (reference: examples/src/main/java/com/datasalt/pangool/examples/TupleViewer.java,
@@ -15,11 +13,7 @@ object TupleViewer {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: TupleViewer <parquet path> [rows]")
     val rows = if (args.length > 1) args(1).toInt else 20
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = spark.read.parquet(args(0))
     df.printSchema()

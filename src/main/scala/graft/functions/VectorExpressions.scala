@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GetStructField,
+  Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -13,9 +12,15 @@ import org.apache.spark.sql.types._
   *
   * The higher-order-function formulations (`aggregate(zip_with(...))`) are
   * interpreted per element — measured 43 s for 12.5M×64-dim cosine pairs at
-  * sf0.1. These expressions generate a tight Java loop inside whole-stage
-  * codegen instead (preference order (b) from the design brief: custom
-  * Expression before UDF).
+  * sf0.1. These expressions run a tight loop instead (preference order (b)
+  * from the design brief: custom Expression before UDF).
+  *
+  * Where the loops live: every loop that a `doGenCode` kernel runs, and
+  * every loop two kernels share, is ONE method of [[KernelLoops]].
+  * `nullSafeEval` calls it directly and `doGenCode` emits a one-line call
+  * to the same method, so whole-stage codegen keeps the kernel without a
+  * second, hand-written Java copy of its loop. `CodegenFallback` kernels
+  * whose loop nothing else shares keep it in their own `nullSafeEval`.
   */
 object VectorExpressions {
   def dot(a: Column, b: Column): Column =
@@ -36,9 +41,12 @@ object VectorExpressions {
   def sortedGramInts(text: Column): Column =
     ColumnBridge.column(SortedGramInts(ColumnBridge.expression(text)))
 
+  /** [[PqEncodeCell]] on cell 0: its slab offset ((0·M + m)·K + k)·Dsub is
+    * the plain single-codebook layout.
+    */
   def pqEncode(e: Column, cen: Array[Double], cc: Array[Double],
       m: Int, k: Int, dsub: Int): Column =
-    ColumnBridge.column(PqEncode(ColumnBridge.expression(e), cen, cc, m, k, dsub))
+    ColumnBridge.column(PqEncodeCell(ColumnBridge.expression(e), Literal(0), cen, cc, m, k, dsub))
 
   def pqEncodeCell(e: Column, cid: Column, cen: Array[Double], cc: Array[Double],
       m: Int, k: Int, dsub: Int): Column =
@@ -58,9 +66,6 @@ object VectorExpressions {
   def hash60Array(strings: Column, mod: Long): Column =
     ColumnBridge.column(Hash60Array(ColumnBridge.expression(strings), mod))
 
-  def shingleHash3(toks: Column, mod: Long): Column =
-    ColumnBridge.column(ShingleHash3(ColumnBridge.expression(toks), mod))
-
   def nbArgmax(toks: Column, vocab: Array[String], cats: Array[String],
       terms: Array[Double], missing: Array[Double]): Column =
     ColumnBridge.column(NbArgmax(ColumnBridge.expression(toks), vocab, cats, terms, missing))
@@ -71,8 +76,10 @@ object VectorExpressions {
   def shingleHashN(toks: Column, n: Int, mod: Long, distinct: Boolean): Column =
     ColumnBridge.column(ShingleHashN(ColumnBridge.expression(toks), n, mod, distinct))
 
+  /** The `cid` field of [[nearestCell]]. */
   def nearestCid(e: Column, cen: Array[Double], sumsq: Array[Double], dim: Int): Column =
-    ColumnBridge.column(NearestCidExpr(ColumnBridge.expression(e), cen, sumsq, dim))
+    ColumnBridge.column(GetStructField(NearestCellExpr(ColumnBridge.expression(e), cen, sumsq, dim),
+      0, Some("cid")))
 
   def nearestCell(e: Column, cen: Array[Double], sumsq: Array[Double], dim: Int): Column =
     ColumnBridge.column(NearestCellExpr(ColumnBridge.expression(e), cen, sumsq, dim))
@@ -105,9 +112,6 @@ object VectorExpressions {
 
   def sortedIntersectCount(a: Column, b: Column): Column =
     ColumnBridge.column(SortedIntersectCount(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  def positionalMatchCount(a: Column, b: Column): Column =
-    ColumnBridge.column(PositionalMatchCount(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   def maxTokenFreq(toks: Column): Column =
     ColumnBridge.column(MaxTokenFreq(ColumnBridge.expression(toks)))
@@ -249,34 +253,11 @@ case class SortedIntersectCount(left: Expression, right: Expression) extends Bin
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
-    val n1 = x.numElements(); val n2 = y.numElements()
-    var i = 0; var j = 0; var c = 0L
-    while (i < n1 && j < n2) {
-      val u = x.getLong(i); val v = y.getLong(j)
-      if (u == v) { c += 1; i += 1; j += 1 }
-      else if (u < v) i += 1 else j += 1
-    }
-    c
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    KernelLoops.intersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j"); val c = ctx.freshName("c")
-      val n1 = ctx.freshName("n1"); val n2 = ctx.freshName("n2")
-      val u = ctx.freshName("u"); val v = ctx.freshName("v")
-      s"""
-         |int $n1 = $a.numElements(); int $n2 = $b.numElements();
-         |int $i = 0; int $j = 0; long $c = 0L;
-         |while ($i < $n1 && $j < $n2) {
-         |  long $u = $a.getLong($i); long $v = $b.getLong($j);
-         |  if ($u == $v) { $c++; $i++; $j++; }
-         |  else if ($u < $v) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"${KernelLoops.javaName}.intersectCount($a, $b)")
 }
 
 /** Highest frequency of any single token in an array<string> — the
@@ -445,55 +426,19 @@ case class InterleaveBits(children: Seq[Expression], bits: Int)
   }
 }
 
-/** Fused coarse-quantizer assignment: argmin over C centroids of
-  * |e|² − 2·e·c + |c|², ties to the lower cid — bit-identical to the
-  * composed `array_min(array(struct(sqDist, cid)...))` form it replaces
-  * (same left-to-right dot accumulation, same operation order, strict-<
-  * keeps the first/lowest cid), but one tight loop with zero per-row
-  * allocations instead of C struct allocations + an array sort pass.
-  * `cen` is the flat row-major centroid matrix, `sumsq` the precomputed
-  * per-centroid |c|² using the same Scala summation order as the composed
-  * form's `lit(cen.map(x*x).sum)`. CodegenFallback like [[PqEncode]] —
-  * the fusion (not codegen) is the win; measured on the corpus assign of
-  * the IVF family at sf0.1.
-  */
-case class NearestCidExpr(child: Expression, cen: Array[Double],
-    sumsq: Array[Double], dim: Int) extends UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  override def dataType: DataType = IntegerType
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-
-  override protected def nullSafeEval(v: Any): Any = {
-    val in = v.asInstanceOf[ArrayData]
-    val a = new Array[Double](dim)
-    var i = 0
-    while (i < dim) { a(i) = in.getDouble(i); i += 1 }
-    var ee = 0.0
-    i = 0
-    while (i < dim) { ee += a(i) * a(i); i += 1 }
-    var best = Double.PositiveInfinity
-    var bestC = 0
-    var c0 = 0
-    while (c0 < sumsq.length) {
-      var dc = 0.0
-      var d = 0
-      val base = c0 * dim
-      while (d < dim) { dc += a(d) * cen(base + d); d += 1 }
-      val dist = ee - 2.0 * dc + sumsq(c0)
-      if (dist < best) { best = dist; bestC = c0 }
-      c0 += 1
-    }
-    bestC
-  }
-}
-
-/** [[NearestCidExpr]]'s sibling that also emits the winning distance as
-  * `struct(cid, dist)` — for operators that need the assignment AND the
-  * prototypicality value (cluster-balanced pruning), where running the
-  * argmin kernel and then re-deriving the winner's distance would double
-  * the dot-product work. Identical arithmetic and tie rule (strict-< keeps
-  * the lowest cid), so `.getField("cid")` of this expression equals
-  * [[NearestCidExpr]] bit-for-bit (property-tested).
+/** Fused coarse-quantizer assignment as `struct(cid, dist)`: argmin over C
+  * centroids of |e|² − 2·e·c + |c|², ties to the lower cid — bit-identical
+  * to the composed `array_min(array(struct(sqDist, cid)...))` form it
+  * replaces (same left-to-right dot accumulation, same operation order,
+  * strict-< keeps the first/lowest cid), but one tight loop instead of C
+  * struct allocations + an array sort pass. Its `cid` field is the plain
+  * assignment ([[VectorExpressions.nearestCid]]); operators that also need
+  * the prototypicality value (cluster-balanced pruning) read `dist` from
+  * the same pass. `cen` is the flat row-major centroid matrix, `sumsq` the
+  * precomputed per-centroid |c|² using the same Scala summation order as
+  * the composed form's `lit(cen.map(x*x).sum)`. A vector shorter than
+  * `dim` fails loudly. CodegenFallback: the fusion (not codegen) is the
+  * win; measured on the corpus assign of the IVF family at sf0.1.
   */
 case class NearestCellExpr(child: Expression, cen: Array[Double],
     sumsq: Array[Double], dim: Int) extends UnaryExpression
@@ -503,28 +448,8 @@ case class NearestCellExpr(child: Expression, cen: Array[Double],
     StructField("dist", DoubleType, nullable = false)))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val in = v.asInstanceOf[ArrayData]
-    val a = new Array[Double](dim)
-    var i = 0
-    while (i < dim) { a(i) = in.getDouble(i); i += 1 }
-    var ee = 0.0
-    i = 0
-    while (i < dim) { ee += a(i) * a(i); i += 1 }
-    var best = Double.PositiveInfinity
-    var bestC = 0
-    var c0 = 0
-    while (c0 < sumsq.length) {
-      var dc = 0.0
-      var d = 0
-      val base = c0 * dim
-      while (d < dim) { dc += a(d) * cen(base + d); d += 1 }
-      val dist = ee - 2.0 * dc + sumsq(c0)
-      if (dist < best) { best = dist; bestC = c0 }
-      c0 += 1
-    }
-    InternalRow(bestC, best)
-  }
+  override protected def nullSafeEval(v: Any): Any =
+    KernelLoops.nearestCell(v.asInstanceOf[ArrayData], cen, sumsq, dim)
 }
 
 /** The nprobe nearest centroid ids, ordered by (distance, cid) ascending —
@@ -532,12 +457,12 @@ case class NearestCellExpr(child: Expression, cen: Array[Double],
   * `slice(array_sort(array(struct(sqDist(e, c), cid)...)), 1, nprobe)`
   * forest (C sqDist subtrees, each re-deriving |e|², plus a C-struct
   * array allocation and sort per query row). Bit-identical order: the
-  * same |e|² − 2·e·c + |c|² per-term arithmetic as [[NearestCidExpr]]
+  * same |e|² − 2·e·c + |c|² distance loop as [[NearestCellExpr]]
   * (|e|² is the same value whichever centroid's subtree re-derived it),
   * and the (d, cid) comparison uses java.lang.Double.compare — exactly
   * array_sort's lexicographic struct order on (double, int), including
   * the −0.0 < 0.0 and ties-to-lower-cid cases. CodegenFallback like
-  * [[NearestCidExpr]]: this runs on the (bounded) query side only.
+  * [[NearestCellExpr]]: this runs on the (bounded) query side only.
   */
 case class NearestCellsExpr(child: Expression, cen: Array[Double],
     sumsq: Array[Double], dim: Int, nprobe: Int) extends UnaryExpression
@@ -545,47 +470,8 @@ case class NearestCellsExpr(child: Expression, cen: Array[Double],
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val in = v.asInstanceOf[ArrayData]
-    val a = new Array[Double](dim)
-    var i = 0
-    while (i < dim) { a(i) = in.getDouble(i); i += 1 }
-    var ee = 0.0
-    i = 0
-    while (i < dim) { ee += a(i) * a(i); i += 1 }
-    val c = sumsq.length
-    val d = new Array[Double](c)
-    var c0 = 0
-    while (c0 < c) {
-      var dc = 0.0
-      var j = 0
-      val base = c0 * dim
-      while (j < dim) { dc += a(j) * cen(base + j); j += 1 }
-      d(c0) = ee - 2.0 * dc + sumsq(c0)
-      c0 += 1
-    }
-    // selection of the nprobe smallest by (d, cid): cids start in ascending
-    // order, so a strict-< selection scan keeps ties on the lower cid —
-    // the same order array_sort's lexicographic struct compare produces
-    val n = math.min(nprobe, c)
-    val idx = Array.tabulate(c)(identity)
-    val out = new Array[Int](n)
-    var k = 0
-    while (k < n) {
-      var best = k
-      var t = k + 1
-      while (t < c) {
-        if (java.lang.Double.compare(d(idx(t)), d(idx(best))) < 0 ||
-          (java.lang.Double.compare(d(idx(t)), d(idx(best))) == 0 &&
-            idx(t) < idx(best))) best = t
-        t += 1
-      }
-      val tmp = idx(k); idx(k) = idx(best); idx(best) = tmp
-      out(k) = idx(k)
-      k += 1
-    }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(v: Any): Any =
+    KernelLoops.nearestCells(v.asInstanceOf[ArrayData], cen, sumsq, dim, nprobe)
 }
 
 /** All nTables LSH sign-bucket codes of a vector in ONE kernel — the
@@ -599,7 +485,9 @@ case class NearestCellsExpr(child: Expression, cen: Array[Double],
   * the same sum of distinct `1L << j` bits (exact long adds, order-free).
   * `planes` is the flat [(table·nPlanes + plane)·dim + d] matrix of the
   * SAME deterministic plane constants the composed form inlined.
-  * CodegenFallback like [[NearestCidExpr]]: the per-row loop dominates.
+  * CodegenFallback like [[NearestCellExpr]]: the per-row loop dominates.
+  * A null vector gives a null array, which `explode`/`posexplode` turn
+  * into NO bucket rows: the vector silently drops out of the join.
   */
 case class LshTableBuckets(child: Expression, planes: Array[Double],
     nPlanes: Int, nTables: Int) extends UnaryExpression
@@ -608,30 +496,8 @@ case class LshTableBuckets(child: Expression, planes: Array[Double],
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val in = v.asInstanceOf[ArrayData]
-    val n = math.min(in.numElements(), dim)
-    val a = new Array[Double](n)
-    var i = 0
-    while (i < n) { a(i) = in.getDouble(i); i += 1 }
-    val out = new Array[Long](nTables)
-    var t = 0
-    while (t < nTables) {
-      var bucket = 0L
-      var j = 0
-      while (j < nPlanes) {
-        val base = (t * nPlanes + j) * dim
-        var dot = 0.0
-        var d = 0
-        while (d < n) { dot += a(d) * planes(base + d); d += 1 }
-        if (dot > 0) bucket += (1L << j)
-        j += 1
-      }
-      out(t) = bucket
-      t += 1
-    }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(v: Any): Any =
+    KernelLoops.lshTableBuckets(v.asInstanceOf[ArrayData], planes, nPlanes, nTables, dim)
 }
 
 /** The multi-probe LSH probe list [Lv et al., VLDB'07] as ONE kernel:
@@ -659,59 +525,23 @@ case class MultiProbeBuckets(child: Expression, planes: Array[Double],
     StructField("bucket", LongType, nullable = false))), containsNull = false)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val in = v.asInstanceOf[ArrayData]
-    val n = math.min(in.numElements(), dim)
-    val a = new Array[Double](n)
-    var i = 0
-    while (i < n) { a(i) = in.getDouble(i); i += 1 }
-    val dots = new Array[Double](nPlanes)
-    val out = new Array[Any](nTables * 4)
-    var t = 0
-    while (t < nTables) {
-      var base = 0L
-      var j = 0
-      while (j < nPlanes) {
-        val pbase = (t * nPlanes + j) * dim
-        var dot = 0.0
-        var d = 0
-        while (d < n) { dot += a(d) * planes(pbase + d); d += 1 }
-        dots(j) = dot
-        if (dot > 0) base += (1L << j)
-        j += 1
-      }
-      // the two lowest (|dot|, j): strict-< selection, ties to lower j —
-      // array_sort's lexicographic (m, j) struct order
-      var j1 = -1; var j2 = -1
-      j = 0
-      while (j < nPlanes) {
-        val m = math.abs(dots(j))
-        if (j1 < 0 || java.lang.Double.compare(m, math.abs(dots(j1))) < 0) {
-          j2 = j1; j1 = j
-        } else if (j2 < 0 || java.lang.Double.compare(m, math.abs(dots(j2))) < 0) {
-          j2 = j
-        }
-        j += 1
-      }
-      val m1 = 1L << j1
-      val m2 = 1L << j2
-      out(t * 4) = InternalRow(t, base)
-      out(t * 4 + 1) = InternalRow(t, base ^ m1)
-      out(t * 4 + 2) = InternalRow(t, base ^ m2)
-      out(t * 4 + 3) = InternalRow(t, base ^ m1 ^ m2)
-      t += 1
-    }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(v: Any): Any =
+    KernelLoops.multiProbeBuckets(v.asInstanceOf[ArrayData], planes, nPlanes, nTables, dim)
 }
 
-/** N-word shingle hashes of a token array — [[ShingleHash3]] generalized to
-  * arbitrary gram length for the contamination / repeated-span operators
-  * (n-gram decontamination conventionally uses 8–13-gram collisions). Same
-  * portable construction: shingle string joined with single spaces, 60-bit
-  * md5-prefix hash, optional `% mod`. `distinct = false` keeps one hash PER
-  * POSITION (occurrence counting); `true` dedups on the shingle string like
-  * list_distinct. Null for arrays shorter than n tokens.
+/** N-word shingle hashes of a token array in ONE pass — fuses a shingle
+  * HOF (a transform building a shingle string per position, then
+  * array_distinct) with [[Hash60Array]]'s hash. With n = 3 and
+  * `distinct = true` it is the dedup family's 3-shingle set (and the
+  * `graft_shingle_hash3` SQL function); longer grams serve the
+  * contamination / repeated-span operators (n-gram decontamination
+  * conventionally uses 8–13-gram collisions). Portable construction:
+  * shingle string joined with single spaces, 60-bit md5-prefix hash,
+  * optional `% mod`. `distinct = false` keeps one hash PER POSITION
+  * (occurrence counting); `true` dedups on the shingle STRING exactly like
+  * list_distinct, so an md5 collision between distinct shingles still
+  * yields the duplicate hash the oracle produces. Null for arrays shorter
+  * than n tokens (callers filter those, matching a `size(toks) >= n` guard).
   */
 case class ShingleHashN(child: Expression, n: Int, mod: Long, distinct: Boolean)
     extends UnaryExpression
@@ -721,50 +551,16 @@ case class ShingleHashN(child: Expression, n: Int, mod: Long, distinct: Boolean)
   override def nullable: Boolean = true
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val in = v.asInstanceOf[ArrayData]
-    val ntok = in.numElements()
-    if (ntok < n) null
-    else {
-      val md = Hash60Array.digest.get()
-      val seen = if (distinct) new java.util.HashSet[String]() else null
-      val out = new scala.collection.mutable.ArrayBuffer[Long](ntok - n + 1)
-      val words = new Array[String](ntok)
-      var i = 0
-      while (i < ntok) { words(i) = in.getUTF8String(i).toString; i += 1 }
-      val sb = new java.lang.StringBuilder
-      i = 0
-      while (i <= ntok - n) {
-        sb.setLength(0)
-        var j = 0
-        while (j < n) {
-          if (j > 0) sb.append(' ')
-          sb.append(words(i + j))
-          j += 1
-        }
-        val s = sb.toString
-        if (seen == null || seen.add(s)) {
-          md.reset()
-          val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          var h = 0L
-          var b = 0
-          while (b < 8) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
-          h = h >>> 4
-          out += (if (mod > 0) h % mod else h)
-        }
-        i += 1
-      }
-      new GenericArrayData(out.toArray)
-    }
-  }
+  override protected def nullSafeEval(v: Any): Any =
+    KernelLoops.shingleHashes(v.asInstanceOf[ArrayData], n, mod, distinct)
 }
 
 /** Residual vector r = e − centroid(cid): the per-row centroid subtraction
   * residual IVF-PQ needs before PQ encoding / ADC table construction
   * (FAISS's by_residual layout). `cen` is the flat row-major centroid
   * matrix [cid·dim + d]. Elementwise single subtractions — exact in FP, so
-  * residuals are engine-portable. CodegenFallback like [[PqEncode]]: one
-  * short per-row loop.
+  * residuals are engine-portable. A vector shorter than `dim` fails
+  * loudly. CodegenFallback: one short per-row loop.
   */
 case class SubCentroid(left: Expression, right: Expression,
     cen: Array[Double], dim: Int) extends BinaryExpression
@@ -775,6 +571,7 @@ case class SubCentroid(left: Expression, right: Expression,
 
   override protected def nullSafeEval(ev: Any, cidv: Any): Any = {
     val e = ev.asInstanceOf[ArrayData]
+    KernelLoops.requireLength("sub_centroid", e, dim)
     val base = cidv.asInstanceOf[Int] * dim
     val out = new Array[Double](dim)
     var d = 0
@@ -832,52 +629,6 @@ case class NbArgmax(child: Expression, vocab: Array[String], cats: Array[String]
   }
 }
 
-/** Distinct 3-word shingles of a token array, hashed to 60-bit md5 values
-  * (optionally `% mod`) in ONE pass — fuses `shingles3` (a transform HOF
-  * building a shingle string per position, then array_distinct) with
-  * [[Hash60Array]]. Dedup happens on the shingle STRING (exactly
-  * list_distinct's semantics, so an md5 collision between distinct shingles
-  * still yields the duplicate hash the oracle produces). Returns null for
-  * arrays with fewer than 3 tokens (callers filter those, matching the
-  * `size(toks) >= 3` guard).
-  */
-case class ShingleHash3(child: Expression, mod: Long)
-    extends UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-
-  override protected def nullSafeEval(v: Any): Any = {
-    val in = v.asInstanceOf[ArrayData]
-    val n = in.numElements()
-    if (n < 3) null
-    else {
-      val md = Hash60Array.digest.get()
-      val seen = new java.util.HashSet[String]()
-      val out = new scala.collection.mutable.ArrayBuffer[Long](n - 2)
-      val words = new Array[String](n)
-      var i = 0
-      while (i < n) { words(i) = in.getUTF8String(i).toString; i += 1 }
-      i = 0
-      while (i < n - 2) {
-        val s = words(i) + " " + words(i + 1) + " " + words(i + 2)
-        if (seen.add(s)) {
-          md.reset()
-          val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          var h = 0L
-          var b = 0
-          while (b < 8) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
-          h = h >>> 4
-          out += (if (mod > 0) h % mod else h)
-        }
-        i += 1
-      }
-      new GenericArrayData(out.toArray)
-    }
-  }
-}
-
 /** Per-element 60-bit md5 hash of an array<string>, optionally reduced
   * `% mod` (mod = 0 → none): identical to the portable
   * `conv(substring(md5(s),1,15),16,10)` construction — the first 15 hex
@@ -885,7 +636,7 @@ case class ShingleHash3(child: Expression, mod: Long)
   * but fused into one pass. The `transform(_, s => hash60(s))` HOF it
   * replaces evaluates interpreted per element. CodegenFallback: md5 itself
   * dominates. Digest instance is ThreadLocal (reset per element), so no
-  * per-row allocation.
+  * per-row allocation; [[ShingleHashN]] shares the hash.
   */
 case class Hash60Array(child: Expression, mod: Long)
     extends UnaryExpression
@@ -893,31 +644,8 @@ case class Hash60Array(child: Expression, mod: Long)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val in = v.asInstanceOf[ArrayData]
-    val n = in.numElements()
-    val md = Hash60Array.digest.get()
-    val out = new Array[Long](n)
-    var i = 0
-    while (i < n) {
-      md.reset()
-      val d = md.digest(in.getUTF8String(i).getBytes)
-      var h = 0L
-      var b = 0
-      while (b < 8) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
-      h = h >>> 4 // first 15 hex chars = top 60 bits
-      out(i) = if (mod > 0) h % mod else h
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-}
-
-object Hash60Array {
-  private[functions] val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
+  override protected def nullSafeEval(v: Any): Any =
+    KernelLoops.hash60Array(v.asInstanceOf[ArrayData], mod)
 }
 
 /** Polynomial rolling hash h = fold(seed, h·31 + code) mod `mod` over the
@@ -933,110 +661,11 @@ case class RollingHash31(child: Expression, seed: Long, mod: Long)
   override def dataType: DataType = LongType
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val s = v.toString
-    var h = seed
-    var i = 0
-    while (i < s.length) { h = (h * 31 + s.charAt(i)) % mod; i += 1 }
-    h
-  }
+  override protected def nullSafeEval(v: Any): Any =
+    KernelLoops.rollingHash31(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], seed, mod)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, in => {
-      val s = ctx.freshName("s"); val h = ctx.freshName("h"); val i = ctx.freshName("i")
-      s"""
-         |java.lang.String $s = $in.toString();
-         |long $h = ${seed}L;
-         |for (int $i = 0; $i < $s.length(); $i++) {
-         |  $h = ($h * 31L + $s.charAt($i)) % ${mod}L;
-         |}
-         |${ev.value} = $h;
-       """.stripMargin
-    })
-}
-
-/** PQ code assignment fused into one pass: for each of `m` subspaces, the
-  * argmin over `k` sub-centroids of |s|² − 2·s·c + |c|², with ties going to
-  * the smaller code (strict-improvement scan in ascending k). The arithmetic
-  * — per-term order included — is EXACTLY the composed
-  * dot(s,s) − 2·dot(s,c) + cc form the oracle mirrors, so results are
-  * bit-identical to the slice/array_min formulation this replaces; that
-  * formulation built a ~128-sub-expression tree whose generated code fell
-  * back to interpreted evaluation and allocated 3 arrays per (m,k) probe
-  * (measured 5.2 s at sf0.1 → this expression: tight loops, zero
-  * allocation per probe).
-  *
-  * `cen` is laid out [(m·K + k)·Dsub + d]; `cc` is the per-(m,k) |c|²
-  * constant, PRE-COMPUTED the same way the literal form computed it
-  * (left-to-right sum of squares).
-  */
-case class PqEncode(child: Expression, cen: Array[Double], cc: Array[Double],
-    m: Int, k: Int, dsub: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-
-  override protected def nullSafeEval(v: Any): Any = {
-    val e = v.asInstanceOf[ArrayData]
-    val out = new Array[Int](m)
-    var mi = 0
-    while (mi < m) {
-      val base = mi * dsub
-      var ss = 0.0
-      var d = 0
-      while (d < dsub) { val x = e.getDouble(base + d); ss += x * x; d += 1 }
-      var best = Double.PositiveInfinity
-      var bestK = 0
-      var ki = 0
-      while (ki < k) {
-        val coff = (mi * k + ki) * dsub
-        var sc = 0.0
-        d = 0
-        while (d < dsub) { sc += e.getDouble(base + d) * cen(coff + d); d += 1 }
-        val dist = ss - 2.0 * sc + cc(mi * k + ki)
-        if (dist < best) { best = dist; bestK = ki }
-        ki += 1
-      }
-      out(mi) = bestK
-      mi += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cenRef = ctx.addReferenceObj("pqCen", cen, "double[]")
-    val ccRef = ctx.addReferenceObj("pqCc", cc, "double[]")
-    nullSafeCodeGen(ctx, ev, in => {
-      val out = ctx.freshName("out"); val mi = ctx.freshName("mi")
-      val ss = ctx.freshName("ss"); val sc = ctx.freshName("sc")
-      val d = ctx.freshName("d"); val ki = ctx.freshName("ki")
-      val best = ctx.freshName("best"); val bestK = ctx.freshName("bestK")
-      val base = ctx.freshName("base"); val coff = ctx.freshName("coff")
-      val dist = ctx.freshName("dist"); val x = ctx.freshName("x")
-      s"""
-         |int[] $out = new int[$m];
-         |for (int $mi = 0; $mi < $m; $mi++) {
-         |  int $base = $mi * $dsub;
-         |  double $ss = 0.0;
-         |  for (int $d = 0; $d < $dsub; $d++) {
-         |    double $x = $in.getDouble($base + $d); $ss += $x * $x;
-         |  }
-         |  double $best = Double.POSITIVE_INFINITY;
-         |  int $bestK = 0;
-         |  for (int $ki = 0; $ki < $k; $ki++) {
-         |    int $coff = ($mi * $k + $ki) * $dsub;
-         |    double $sc = 0.0;
-         |    for (int $d = 0; $d < $dsub; $d++) {
-         |      $sc += $in.getDouble($base + $d) * $cenRef[$coff + $d];
-         |    }
-         |    double $dist = $ss - 2.0 * $sc + $ccRef[$mi * $k + $ki];
-         |    if ($dist < $best) { $best = $dist; $bestK = $ki; }
-         |  }
-         |  $out[$mi] = $bestK;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-  }
+    defineCodeGen(ctx, ev, in => s"${KernelLoops.javaName}.rollingHash31($in, ${seed}L, ${mod}L)")
 }
 
 /** Fused ADC distance-table builder: the M×K table of
@@ -1049,7 +678,9 @@ case class PqEncode(child: Expression, cen: Array[Double], cc: Array[Double],
   * composed dot(s,s) − 2·dot(s,c) + cc form (|s|² is the same value
   * whichever k re-derived it, so hoisting it per subspace is bit-identical),
   * and the scale/floor matches Spark's `floor(x·1e6)` on doubles
-  * ((long) Math.floor). `cen`/`cc` are laid out exactly like [[PqEncode]]'s.
+  * ((long) Math.floor). `cen`/`cc` are laid out like cell 0 of
+  * [[PqEncodeCell]]'s, and it shares that kernel's subspace distance loop.
+  * A vector shorter than m·dsub fails loudly.
   */
 case class PqDtab(child: Expression, cen: Array[Double], cc: Array[Double],
     m: Int, k: Int, dsub: Int) extends UnaryExpression {
@@ -1057,65 +688,13 @@ case class PqDtab(child: Expression, cen: Array[Double], cc: Array[Double],
     ArrayType(ArrayType(LongType, containsNull = false), containsNull = false)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val e = v.asInstanceOf[ArrayData]
-    val out = new Array[Any](m)
-    var mi = 0
-    while (mi < m) {
-      val base = mi * dsub
-      var ss = 0.0
-      var d = 0
-      while (d < dsub) { val x = e.getDouble(base + d); ss += x * x; d += 1 }
-      val row = new Array[Long](k)
-      var ki = 0
-      while (ki < k) {
-        val coff = (mi * k + ki) * dsub
-        var sc = 0.0
-        d = 0
-        while (d < dsub) { sc += e.getDouble(base + d) * cen(coff + d); d += 1 }
-        val dist = ss - 2.0 * sc + cc(mi * k + ki)
-        row(ki) = math.floor(dist * 1000000.0).toLong
-        ki += 1
-      }
-      out(mi) = new GenericArrayData(row)
-      mi += 1
-    }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(v: Any): Any =
+    KernelLoops.pqDtab(v.asInstanceOf[ArrayData], cen, cc, m, k, dsub)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cenRef = ctx.addReferenceObj("dtabCen", cen, "double[]")
     val ccRef = ctx.addReferenceObj("dtabCc", cc, "double[]")
-    nullSafeCodeGen(ctx, ev, in => {
-      val out = ctx.freshName("out"); val row = ctx.freshName("row")
-      val mi = ctx.freshName("mi"); val ki = ctx.freshName("ki")
-      val ss = ctx.freshName("ss"); val sc = ctx.freshName("sc")
-      val d = ctx.freshName("d"); val base = ctx.freshName("base")
-      val coff = ctx.freshName("coff"); val dist = ctx.freshName("dist")
-      val x = ctx.freshName("x")
-      s"""
-         |Object[] $out = new Object[$m];
-         |for (int $mi = 0; $mi < $m; $mi++) {
-         |  int $base = $mi * $dsub;
-         |  double $ss = 0.0;
-         |  for (int $d = 0; $d < $dsub; $d++) {
-         |    double $x = $in.getDouble($base + $d); $ss += $x * $x;
-         |  }
-         |  long[] $row = new long[$k];
-         |  for (int $ki = 0; $ki < $k; $ki++) {
-         |    int $coff = ($mi * $k + $ki) * $dsub;
-         |    double $sc = 0.0;
-         |    for (int $d = 0; $d < $dsub; $d++) {
-         |      $sc += $in.getDouble($base + $d) * $cenRef[$coff + $d];
-         |    }
-         |    double $dist = $ss - 2.0 * $sc + $ccRef[$mi * $k + $ki];
-         |    $row[$ki] = (long) java.lang.Math.floor($dist * 1000000.0);
-         |  }
-         |  $out[$mi] = new org.apache.spark.sql.catalyst.util.GenericArrayData($row);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, e => s"${KernelLoops.javaName}.pqDtab($e, $cenRef, $ccRef, $m, $k, $dsub)")
   }
 }
 
@@ -1125,7 +704,7 @@ case class PqDtab(child: Expression, cen: Array[Double], cc: Array[Double],
   * (3·M element_at evaluations, each re-deriving null/boundary checks) with
   * one loop over the codes array. Long additions in the same order →
   * identical values; codes are always in [0, K) by construction
-  * ([[PqEncode]] emits argmin indices), so the boundary behavior the
+  * ([[PqEncodeCell]] emits argmin indices), so the boundary behavior the
   * element_at chain had for invalid indices is unreachable.
   */
 case class AdcSum(left: Expression, right: Expression) extends BinaryExpression {
@@ -1133,36 +712,33 @@ case class AdcSum(left: Expression, right: Expression) extends BinaryExpression 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val dt = a.asInstanceOf[ArrayData]
-    val cs = b.asInstanceOf[ArrayData]
-    val n = cs.numElements()
-    var s = 0L
-    var i = 0
-    while (i < n) { s += dt.getArray(i).getLong(cs.getInt(i)); i += 1 }
-    s
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    KernelLoops.adcSum(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (dt, cs) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n"); val s = ctx.freshName("s")
-      s"""
-         |int $n = $cs.numElements();
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $dt.getArray($i).getLong($cs.getInt($i));
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (dt, cs) => s"${KernelLoops.javaName}.adcSum($dt, $cs)")
 }
 
-/** [[PqEncode]] with PER-CELL codebooks (local/residual sub-codebooks — the
-  * refinement where each IVF cell's PQ spans only that cell's local
-  * spread): identical argmin arithmetic, but the codebook slab for the row
-  * is selected by the `cid` input. `cen` is laid out
-  * [((cid·M + m)·K + k)·Dsub + d]; `cc` is [(cid·M + m)·K + k]. Left child
-  * is the (residual) vector, right child the cell id.
+/** PQ code assignment fused into one pass: for each of `m` subspaces, the
+  * argmin over `k` sub-centroids of |s|² − 2·s·c + |c|², with ties going to
+  * the smaller code (strict-improvement scan in ascending k). The arithmetic
+  * — per-term order included — is EXACTLY the composed
+  * dot(s,s) − 2·dot(s,c) + cc form the oracle mirrors, so results are
+  * bit-identical to the slice/array_min formulation this replaces; that
+  * formulation built a ~128-sub-expression tree whose generated code fell
+  * back to interpreted evaluation and allocated 3 arrays per (m,k) probe
+  * (measured 5.2 s at sf0.1 → this expression: tight loops, no allocation
+  * per probe).
+  *
+  * The codebook slab for the row is selected by the `cid` input — PER-CELL
+  * codebooks (local/residual sub-codebooks — the refinement where each IVF
+  * cell's PQ spans only that cell's local spread). `cen` is laid out
+  * [((cid·M + m)·K + k)·Dsub + d]; `cc` is the per-(cid,m,k) |c|² constant
+  * [(cid·M + m)·K + k], PRE-COMPUTED the way the literal form computed it
+  * (left-to-right sum of squares). Cell 0 is the single-codebook layout
+  * [(m·K + k)·Dsub + d] ([[VectorExpressions.pqEncode]]). Left child is the
+  * (residual) vector, right child the cell id. A vector shorter than m·dsub
+  * fails loudly.
   */
 case class PqEncodeCell(left: Expression, right: Expression,
     cen: Array[Double], cc: Array[Double], m: Int, k: Int, dsub: Int)
@@ -1185,68 +761,14 @@ case class PqEncodeCell(left: Expression, right: Expression,
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
 
-  override protected def nullSafeEval(v: Any, cidv: Any): Any = {
-    val e = v.asInstanceOf[ArrayData]
-    val cell = cidv.asInstanceOf[Int]
-    val out = new Array[Int](m)
-    var mi = 0
-    while (mi < m) {
-      val base = mi * dsub
-      var ss = 0.0
-      var d = 0
-      while (d < dsub) { val x = e.getDouble(base + d); ss += x * x; d += 1 }
-      var best = Double.PositiveInfinity
-      var bestK = 0
-      var ki = 0
-      while (ki < k) {
-        val coff = ((cell * m + mi) * k + ki) * dsub
-        var sc = 0.0
-        d = 0
-        while (d < dsub) { sc += e.getDouble(base + d) * cen(coff + d); d += 1 }
-        val dist = ss - 2.0 * sc + cc((cell * m + mi) * k + ki)
-        if (dist < best) { best = dist; bestK = ki }
-        ki += 1
-      }
-      out(mi) = bestK
-      mi += 1
-    }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(v: Any, cidv: Any): Any =
+    KernelLoops.pqEncode(v.asInstanceOf[ArrayData], cidv.asInstanceOf[Int], cen, cc, m, k, dsub)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cenRef = ctx.addReferenceObj("pqcCen", cen, "double[]")
     val ccRef = ctx.addReferenceObj("pqcCc", cc, "double[]")
-    nullSafeCodeGen(ctx, ev, (in, cid) => {
-      val out = ctx.freshName("out"); val mi = ctx.freshName("mi")
-      val ss = ctx.freshName("ss"); val sc = ctx.freshName("sc")
-      val d = ctx.freshName("d"); val ki = ctx.freshName("ki")
-      val best = ctx.freshName("best"); val bestK = ctx.freshName("bestK")
-      val base = ctx.freshName("base"); val coff = ctx.freshName("coff")
-      val dist = ctx.freshName("dist"); val x = ctx.freshName("x")
-      s"""
-         |int[] $out = new int[$m];
-         |for (int $mi = 0; $mi < $m; $mi++) {
-         |  int $base = $mi * $dsub;
-         |  double $ss = 0.0;
-         |  for (int $d = 0; $d < $dsub; $d++) {
-         |    double $x = $in.getDouble($base + $d); $ss += $x * $x;
-         |  }
-         |  double $best = Double.POSITIVE_INFINITY;
-         |  int $bestK = 0;
-         |  for (int $ki = 0; $ki < $k; $ki++) {
-         |    int $coff = ((($cid * $m) + $mi) * $k + $ki) * $dsub;
-         |    double $sc = 0.0;
-         |    for (int $d = 0; $d < $dsub; $d++) {
-         |      $sc += $in.getDouble($base + $d) * $cenRef[$coff + $d];
-         |    }
-         |    double $dist = $ss - 2.0 * $sc + $ccRef[(($cid * $m) + $mi) * $k + $ki];
-         |    if ($dist < $best) { $best = $dist; $bestK = $ki; }
-         |  }
-         |  $out[$mi] = $bestK;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (e, cid) =>
+      s"${KernelLoops.javaName}.pqEncode($e, $cid, $cenRef, $ccRef, $m, $k, $dsub)")
   }
 }
 
@@ -1268,26 +790,8 @@ case class PackedGrams4(child: Expression)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val s = v.toString
-    val n = s.length - 3
-    if (n <= 0) new GenericArrayData(Array.empty[Long])
-    else {
-      @inline def cp(k: Int): Long = {
-        val c = s.charAt(k).toLong; if (c > 255) 255L else c
-      }
-      val out = new Array[Long](n)
-      // rolling pack: keep the low 3 chars, shift in the next
-      var acc = (cp(0) * 256 + cp(1)) * 256 + cp(2)
-      var i = 0
-      while (i < n) {
-        acc = ((acc * 256) + cp(i + 3)) & 0xffffffffL
-        out(i) = acc
-        i += 1
-      }
-      new GenericArrayData(out)
-    }
-  }
+  override protected def nullSafeEval(v: Any): Any =
+    new GenericArrayData(KernelLoops.packedGrams4(v.toString))
 }
 
 /** [[PackedGrams4]] sorted, distinct, and re-encoded as order-preserving
@@ -1308,31 +812,8 @@ case class SortedGramInts(child: Expression)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val s = v.toString
-    val n = s.length - 3
-    if (n <= 0) new GenericArrayData(Array.empty[Int])
-    else {
-      @inline def cp(k: Int): Long = {
-        val c = s.charAt(k).toLong; if (c > 255) 255L else c
-      }
-      val out = new Array[Int](n)
-      var acc = (cp(0) * 256 + cp(1)) * 256 + cp(2)
-      var i = 0
-      while (i < n) {
-        acc = ((acc * 256) + cp(i + 3)) & 0xffffffffL
-        out(i) = (acc ^ 0x80000000L).toInt
-        i += 1
-      }
-      java.util.Arrays.sort(out)
-      var w = 1; var r = 1
-      while (r < n) {
-        if (out(r) != out(w - 1)) { out(w) = out(r); w += 1 }
-        r += 1
-      }
-      new GenericArrayData(java.util.Arrays.copyOfRange(out, 0, w))
-    }
-  }
+  override protected def nullSafeEval(v: Any): Any =
+    new GenericArrayData(KernelLoops.sortedGramInts(v.toString))
 }
 
 /** Jaccard similarity of two SORTED, DISTINCT array<long> columns via a
@@ -1345,73 +826,11 @@ case class SortedJaccard(left: Expression, right: Expression) extends BinaryExpr
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
-    val n1 = x.numElements(); val n2 = y.numElements()
-    var i = 0; var j = 0; var c = 0
-    while (i < n1 && j < n2) {
-      val u = x.getLong(i); val v = y.getLong(j)
-      if (u == v) { c += 1; i += 1; j += 1 }
-      else if (u < v) i += 1 else j += 1
-    }
-    val union = n1 + n2 - c
-    if (union == 0) 0.0 else c.toDouble / union
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    KernelLoops.sortedJaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j"); val c = ctx.freshName("c")
-      val n1 = ctx.freshName("n1"); val n2 = ctx.freshName("n2")
-      val u = ctx.freshName("u"); val v = ctx.freshName("v"); val un = ctx.freshName("un")
-      s"""
-         |int $n1 = $a.numElements(); int $n2 = $b.numElements();
-         |int $i = 0; int $j = 0; int $c = 0;
-         |while ($i < $n1 && $j < $n2) {
-         |  long $u = $a.getLong($i); long $v = $b.getLong($j);
-         |  if ($u == $v) { $c++; $i++; $j++; }
-         |  else if ($u < $v) { $i++; } else { $j++; }
-         |}
-         |int $un = $n1 + $n2 - $c;
-         |${ev.value} = ($un == 0) ? 0.0 : ((double) $c) / $un;
-       """.stripMargin
-    })
-}
-
-/** Count of POSITIONS where two equal-length array<long> columns agree —
-  * the MinHash J estimator's match count over two K-position signatures
-  * (matches/K → Ĵ). One fused loop, no per-row allocation; the HOF form
-  * (`aggregate(zip_with(...))`) is interpreted and allocates the zipped
-  * array per row — this sits inside a band self-join's projection, where
-  * tens of millions of pairs flow through.
-  */
-case class PositionalMatchCount(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var i = 0; var c = 0L
-    while (i < n) {
-      if (x.getLong(i) == y.getLong(i)) c += 1
-      i += 1
-    }
-    c
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val c = ctx.freshName("c"); val n = ctx.freshName("n")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $c = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.getLong($i) == $b.getLong($i)) $c++;
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"${KernelLoops.javaName}.sortedJaccard($a, $b)")
 }
 
 /** Dot product of two array<double> columns (element-null-free arrays). */
@@ -1420,26 +839,11 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0; var i = 0
-    while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
-    s
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    KernelLoops.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n"); val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"${KernelLoops.javaName}.dot($a, $b)")
 }
 
 /** MinHash signature: K permutation minima over an array<long> of shingle
@@ -1450,58 +854,14 @@ case class MinHashSig(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val in = v.asInstanceOf[ArrayData]
-    val n = in.numElements()
-    if (n == 0) null
-    else {
-      val sig = Array.fill(TextHash.K)(Long.MaxValue)
-      var i = 0
-      while (i < n) {
-        val h = in.getLong(i); var k = 0
-        while (k < TextHash.K) {
-          val x = (h * MinHashSig.A(k) + MinHashSig.B(k)) % TextHash.P
-          if (x < sig(k)) sig(k) = x
-          k += 1
-        }
-        i += 1
-      }
-      new GenericArrayData(sig)
-    }
-  }
-
   override def nullable: Boolean = true
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("permA", MinHashSig.A, "long[]")
-    val bRef = ctx.addReferenceObj("permB", MinHashSig.B, "long[]")
-    val k = TextHash.K; val p = TextHash.P
-    nullSafeCodeGen(ctx, ev, in => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val n = ctx.freshName("n"); val sig = ctx.freshName("sig"); val h = ctx.freshName("h")
-      val x = ctx.freshName("x")
-      s"""
-         |int $n = $in.numElements();
-         |if ($n == 0) { ${ev.isNull} = true; } else {
-         |  long[] $sig = new long[$k];
-         |  java.util.Arrays.fill($sig, Long.MAX_VALUE);
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    long $h = $in.getLong($i);
-         |    for (int $j = 0; $j < $k; $j++) {
-         |      long $x = ($h * $aRef[$j] + $bRef[$j]) % ${p}L;
-         |      if ($x < $sig[$j]) $sig[$j] = $x;
-         |    }
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sig);
-         |}
-       """.stripMargin
-    })
-  }
-}
+  override protected def nullSafeEval(v: Any): Any =
+    KernelLoops.minhashSig(v.asInstanceOf[ArrayData])
 
-object MinHashSig {
-  val A: Array[Long] = Array.tabulate(TextHash.K)(TextHash.permA)
-  val B: Array[Long] = Array.tabulate(TextHash.K)(TextHash.permB)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, in =>
+      s"${ev.value} = ${KernelLoops.javaName}.minhashSig($in); ${ev.isNull} = ${ev.value} == null;")
 }
 
 /** 60-bit SimHash over an array<long> of token hashes (multiset: repeats
@@ -1511,35 +871,9 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val in = v.asInstanceOf[ArrayData]
-    val votes = new Array[Int](60)
-    var i = 0
-    while (i < in.numElements()) {
-      val h = in.getLong(i); var b = 0
-      while (b < 60) { if (((h >> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1; b += 1 }
-      i += 1
-    }
-    var out = 0L; var b = 0
-    while (b < 60) { if (votes(b) > 0) out |= (1L << b); b += 1 }
-    out
-  }
+  override protected def nullSafeEval(v: Any): Any =
+    KernelLoops.simhash64(v.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, in => {
-      val i = ctx.freshName("i"); val b = ctx.freshName("b")
-      val votes = ctx.freshName("votes"); val h = ctx.freshName("h"); val out = ctx.freshName("out")
-      s"""
-         |int[] $votes = new int[60];
-         |for (int $i = 0; $i < $in.numElements(); $i++) {
-         |  long $h = $in.getLong($i);
-         |  for (int $b = 0; $b < 60; $b++) {
-         |    if ((($h >> $b) & 1L) == 1L) $votes[$b]++; else $votes[$b]--;
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $b = 0; $b < 60; $b++) { if ($votes[$b] > 0) $out |= (1L << $b); }
-         |${ev.value} = $out;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, in => s"${KernelLoops.javaName}.simhash64($in)")
 }

@@ -144,7 +144,10 @@ object Ann {
 
   /** [[lshBuckets]] over a pre-[[normedOf]]'d frame — the same plane
     * constants for the dir corpus, a [[AnnIndex.buildOn]] corpus, or an
-    * [[AnnIndex.append]] ingest batch.
+    * [[AnnIndex.append]] ingest batch. A row whose `e` is null yields NO
+    * bucket rows: the kernel returns a null array and `posexplode` emits
+    * nothing for it, so the vector is absent from every bucket join, with
+    * no error and no count.
     */
   def lshBucketsOf(v: DataFrame, nPlanes: Int = 4, nTables: Int = 8): DataFrame =
     v.select(col("vec_id"), col("label"),
@@ -203,7 +206,9 @@ object Ann {
     * a per-table array_sort over (|dot|, j) structs. Same dot order, same
     * sign test, same lexicographic (|dot|, j) minima selection (ties to the
     * lower plane index) — property-tested against the composed forms
-    * rebuilt verbatim, oracle re-verified.
+    * rebuilt verbatim, oracle re-verified. A null vector gives a null
+    * array, so `explode` emits no probe rows for that query: it finds no
+    * candidates and drops out of the result, with no error and no count.
     */
   private[operators] def multiProbesCol(e: Column, nPlanes: Int = 4,
       nTables: Int = 8): Column =

@@ -43,7 +43,7 @@ object Dedup {
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .where(size(col("toks")) >= 3)
       .select(col("doc_id"),
-        graft.functions.VectorExpressions.shingleHash3(col("toks"), P).as("h0"))
+        graft.functions.VectorExpressions.shingleHashN(col("toks"), 3, P, distinct = true).as("h0"))
 
   /** LSH band keys (doc_id, bid, bkey, carry…) of a shingle-hashed frame —
     * the materialized index layout [[graft.streaming.DedupStream]] and

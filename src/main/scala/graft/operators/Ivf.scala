@@ -27,25 +27,18 @@ object Ivf {
       lit(cen.map(x => x * x).sum)
   }
 
-  /** argmin over centroids — the fused [[VectorExpressions.nearestCid]]
+  /** argmin over centroids — the `cid` field of the fused [[nearestCell]]
     * kernel (bit-identical arithmetic to the composed
     * `array_min(array(struct(sqDist, cid)...))` form, which allocated C
     * structs per row; corpus assign measured 2× faster fused at sf0.1).
     * Requires the conventional dense cid numbering 0..C−1.
     */
-  private[operators] def nearestCid(e: Column, centroids: Seq[(Int, Seq[Double])]): Column = {
-    val sorted = centroids.sortBy(_._1)
-    require(sorted.map(_._1) == (0 until sorted.length), s"dense cids expected")
-    val dim = sorted.head._2.length
-    val flat = sorted.iterator.flatMap(_._2).toArray
-    // same summation order as the lit(cen.map(x*x).sum) constant it replaces
-    val sumsq = sorted.map(_._2.map(x => x * x).sum).toArray
-    VectorExpressions.nearestCid(e, flat, sumsq, dim)
-  }
+  private[operators] def nearestCid(e: Column, centroids: Seq[(Int, Seq[Double])]): Column =
+    nearestCell(e, centroids).getField("cid")
 
   /** argmin AND its distance as struct(cid, dist) — the fused
     * [[VectorExpressions.nearestCell]] kernel, same arithmetic and
-    * lowest-cid tie rule as [[nearestCid]] (property-tested equal). For
+    * lowest-cid tie rule as [[nearestCid]], which reads its `cid`. For
     * consumers that need the prototypicality value too (e.g.
     * [[Dedup.clusterPrune]]), where argmin-then-rederive would double the
     * dot-product work.
@@ -55,6 +48,7 @@ object Ivf {
     require(sorted.map(_._1) == (0 until sorted.length), s"dense cids expected")
     val dim = sorted.head._2.length
     val flat = sorted.iterator.flatMap(_._2).toArray
+    // same summation order as the lit(cen.map(x*x).sum) constant it replaces
     val sumsq = sorted.map(_._2.map(x => x * x).sum).toArray
     VectorExpressions.nearestCell(e, flat, sumsq, dim)
   }

@@ -55,7 +55,7 @@ object Pq {
   }
 
   /** Lloyd-refine the sub-codebooks: assign every subvector to its nearest
-    * sub-centroid (one fused [[graft.functions.PqEncode]] pass over the
+    * sub-centroid (one fused [[graft.functions.PqEncodeCell]] pass over the
     * corpus — all 8 subspaces at once), then per-(subspace, code) per-dim
     * means become the new centroids (one shuffle keyed (m, code); the
     * updated codebook is M×K×Dsub doubles collected like [[Ivf.train]]'s).

@@ -144,7 +144,7 @@ object Quality {
       .where(size(col("toks")) >= 3)
       .select(col("source"),
         explode(graft.functions.VectorExpressions
-          .shingleHash3(col("toks"), graft.functions.TextHash.P)).as("h"))
+          .shingleHashN(col("toks"), 3, graft.functions.TextHash.P, distinct = true)).as("h"))
       .groupBy(col("h")).agg(sort_array(collect_set(col("source"))).as("ss"))
       .select(explode(pairs).as("p"))
       .groupBy(col("p.src_a").as("src_a"), col("p.src_b").as("src_b"))

@@ -223,8 +223,8 @@ object TextAnalysis {
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .where(size(col("toks")) >= 3)
       .select(col("doc_id"),
-        array_min(graft.functions.VectorExpressions.shingleHash3(
-          col("toks"), 0L)).as("fp"))
+        array_min(graft.functions.VectorExpressions.shingleHashN(
+          col("toks"), 3, 0L, distinct = true)).as("fp"))
 
   /** A14 — Naive Bayes training: per-(category, word) counts + per-category
     * token totals, category = source. One shuffle keyed (source, word); the

@@ -12,7 +12,7 @@ import scala.jdk.CollectionConverters._
   */
 class DeadCodeGuardSpec extends GraftSuite {
 
-  private val guardedDirs = Seq("operators", "streaming", "io")
+  private val guardedDirs = Seq("operators", "streaming", "io", "functions")
     .map(d => Paths.get(s"src/main/scala/graft/$d"))
   private val mainDir = Paths.get("src/main/scala/graft")
   private val testDir = Paths.get("src/test/scala/graft")

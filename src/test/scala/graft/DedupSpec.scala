@@ -130,7 +130,7 @@ class DedupSpec extends GraftSuite {
       .as[(Long, Seq[Long])].collect().toMap
     val fused = toksDf
       .select(col("doc_id"),
-        graft.functions.VectorExpressions.shingleHash3(col("toks"), TextHash.P).as("h"))
+        graft.functions.VectorExpressions.shingleHashN(col("toks"), 3, TextHash.P, distinct = true).as("h"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(fused == declarative, "same hashes in same first-occurrence order")
   }
